@@ -2,26 +2,22 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.ops.{GraphOps, LocalGate}
 import Model.TripleRow
 
 /** Entity canonicalization via connected components over owl:sameAs edges
-  * (SURVEY.md §2.5): iterative DataFrame hash-min label propagation —
-  * every vertex converges to the lexicographically smallest IRI in its
+  * (SURVEY.md §2.5): every vertex is labelled with the smallest IRI of its
   * component, which becomes the canonical id.
   *
-  * Scale design (north_rule: "partitioning / shuffle / skew handled
-  * explicitly"):
-  *  - edges are deduplicated BEFORE the loop — hub entities appear in ~20%
-  *    of documents, so raw edge multiplicity is power-law; dedup collapses
-  *    it to vocabulary scale and is itself skew-safe (partial aggregation
-  *    does the heavy lifting map-side).
-  *  - the propagation join keys on vertex id AFTER dedup, so hub skew is
-  *    bounded by max degree, and AQE skew-join splitting
-  *    (spark.sql.adaptive.skewJoin) covers residual imbalance.
-  *  - `localCheckpoint` each iteration truncates the lineage so plan size
-  *    doesn't grow O(iterations) (SURVEY.md §4).
-  *  - convergence in O(log diameter) iterations for min-propagation on these
-  *    star-shaped alias clusters (typically 2).
+  * The components come from [[graft.ops.GraphOps.connectedComponents]]'s
+  * union-find and pointer-doubling loop: IRIs are interned to BIGINT ranks
+  * in Spark's string order (UTF-8 bytes, the order SQL `min` uses), so the
+  * shared min-id label is exactly the smallest IRI on both paths. Edges
+  * are deduplicated BEFORE the components run — hub entities appear in
+  * ~20% of documents, so raw edge multiplicity is power-law; dedup
+  * collapses it to vocabulary scale and is itself skew-safe (partial
+  * aggregation does the heavy lifting map-side).
   */
 object Canonicalize {
 
@@ -43,110 +39,56 @@ object Canonicalize {
 
   /** Size gate for the driver-local CC path, in DISTINCT edges: below it
     * the whole component computation is cheaper on the driver (one dedup
-    * pass + collect + union-find) than ~3-5 distributed iterations ×
-    * (join + agg + checkpoint + probe) jobs. Same spirit as AQE's broadcast
-    * gate: tiny data wants a local algorithm. 1M string edges ≈ ~150 MB on
-    * a 32 g driver — safe to collect. */
+    * pass + collect + union-find) than the distributed loop's iterations
+    * × (join + agg + checkpoint + probe) jobs. Same spirit as AQE's
+    * broadcast gate: tiny data wants a local algorithm. */
   val LOCAL_CC_MAX_EDGES = 1000000
 
-  /** Hash-min connected components. Input: (src, dst) string edges.
-    * Output: (id, canonical) — every vertex labeled with the
-    * lexicographically smallest IRI of its component.
+  /** Connected components over (src, dst) string edges. Output:
+    * (id, canonical) — every vertex labeled with the smallest IRI of its
+    * component in Spark's string order.
     *
-    * Two physical paths with identical results:
-    *  - ≤ LOCAL_CC_MAX_EDGES DISTINCT edges: driver-local union-find (the
-    *    result is a local relation, so downstream joins against it
-    *    broadcast without stats guessing). sameAs alias graphs are
-    *    vocabulary-scale in most corpora even when the corpus is 100 TB.
-    *  - otherwise: distributed hash-min label propagation with AQE skew
-    *    handling and lineage-truncating checkpoints.
-    *
-    * The gate deduplicates BEFORE probing (round 3): hub entities give the
-    * raw edge stream power-law multiplicity — at 4M synthetic pages there
-    * are ~600k raw but only ~6k distinct edges, and a raw-count gate was
-    * routing this vocabulary-scale graph to the (fixed-latency-dominated,
-    * scaling-hostile) distributed loop. The dedup's map-side partial
-    * aggregation collapses multiplicity before the shuffle, and the
-    * distributed path pays the same dedup anyway (sym.distinct), so the
-    * probe's only over-gate cost is one upstream pass — the price of not
-    * caching, already the pipeline's documented trade. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+    * One [[graft.ops.LocalGate.collectAtMost]] over the DISTINCT edges
+    * picks the path (at 4M synthetic pages there are ~600k raw but only
+    * ~6k distinct edges):
+    *  - ≤ LOCAL_CC_MAX_EDGES: the collected edges' IRIs are sorted on the
+    *    driver and their ranks go through GraphOps' union-find. The result
+    *    is a local relation, so downstream joins against it broadcast
+    *    without stats guessing;
+    *  - otherwise: [[distributedCC]] recomputes the distinct edges. */
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    val probe = edges.select($"src", $"dst").distinct()
-      .limit(LOCAL_CC_MAX_EDGES + 1)
-      .as[(String, String)].collect()
-    if (probe.length <= LOCAL_CC_MAX_EDGES) {
-      spark.createDataset(localUnionFind(probe).toSeq)
-        .toDF("id", "canonical")
-    } else distributedCC(edges, maxIter)
+    val distinct = edges.select($"src", $"dst").distinct()
+    LocalGate.collectAtMost(distinct.as[(String, String)], LOCAL_CC_MAX_EDGES) match {
+      case Some(es) =>
+        val iris = es.flatMap(e => Array(e._1, e._2)).distinct
+          .map(UTF8String.fromString).sorted.map(_.toString)
+        val rank = iris.zipWithIndex.toMap
+        val labels = GraphOps.localComponents(
+          es.map(e => rank(e._1).toLong), es.map(e => rank(e._2).toLong))
+        spark.createDataset(labels.toIndexedSeq.map { case (n, c) =>
+            (iris(n.toInt), iris(c.toInt)) })
+          .toDF("id", "canonical")
+      case None => distributedCC(distinct)
+    }
   }
 
-  /** The distributed hash-min loop (taken above LOCAL_CC_MAX_EDGES; directly
-    * callable in tests to cover the at-scale path on small inputs). */
-  def distributedCC(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+  /** The above-gate path (directly callable in tests): rank every IRI in
+    * one sort, checkpointed so a recompute cannot renumber, run GraphOps'
+    * pointer-doubling loop over the ranks, and join the labels back. */
+  private[kg] def distributedCC(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // symmetrize once; the propagation below then only needs src→dst flow
-    val sym = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .localCheckpoint()
-
-    var labels = sym.select($"src".as("id")).distinct()
-      .withColumn("label", $"id")
-      .localCheckpoint()
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val msgs = sym.join(labels, sym("src") === labels("id"))
-        .select(sym("dst").as("id"), labels("label"))
-      val nextPlan = msgs.union(labels.select($"id", $"label"))
-        .groupBy($"id").agg(min($"label").as("label"))
-      // lineage truncation matters for long chains; for the common 2-3
-      // iteration case, checkpointing every other round halves the extra
-      // materialization jobs on the critical path
-      val next = if (iter % 2 == 1 || iter >= 3) nextPlan.localCheckpoint()
-        else nextPlan
-      // star-shaped alias clusters converge in 2 iterations; skip the
-      // convergence probe (an extra job) until they could possibly be done
-      val changed =
-        if (iter < 2) 1L
-        else next.as("n")
-          .join(labels.as("o"), $"n.id" === $"o.id")
-          .filter($"n.label" =!= $"o.label")
-          .limit(1).count() // any-change probe, cheap
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    labels.select($"id", $"label".as("canonical"))
-  }
-
-  /** Driver-local union-find with path compression; representative =
-    * lexicographically smallest vertex (matches hash-min fixpoint). */
-  def localUnionFind(edges: Array[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        // union by min keeps the representative the smallest label
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    parent.keys.map(v => v -> find(v)).toMap
+    val ranks = edges.select($"src".as("iri")).union(edges.select($"dst"))
+      .distinct().orderBy($"iri").as[String].rdd.zipWithIndex()
+      .toDF("iri", "r").localCheckpoint()
+    def ranked(iriCol: String, rCol: String) =
+      ranks.select($"iri".as(iriCol), $"r".as(rCol))
+    val ids = edges.join(ranked("src", "u"), "src").join(ranked("dst", "v"), "dst")
+    GraphOps.distributedComponents(ids.select($"u", $"v"))
+      .join(ranked("id", "n"), "n").join(ranked("canonical", "component"), "component")
+      .select($"id", $"canonical")
   }
 
   /** Rewrite triples so subjects/objects use canonical entity ids.

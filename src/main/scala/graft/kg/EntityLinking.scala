@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.ops.LocalGate
 import Model._
 
 /** Mention detection + dictionary entity linking (SURVEY.md §2.5).
@@ -85,23 +86,21 @@ object EntityLinking {
     val spark = mentions.sparkSession
     import spark.implicits._
 
-    // ONE capped collect doubles as the size-gate probe AND the data fetch
+    // ONE gated collect doubles as the size-gate probe AND the data fetch
     // (CollectLimit over the map-side-combined distinct short-circuits).
     // Both the distinct-surface set and the dictionary must fit the gate
     // for the local path; the dictionary already has to fit the driver for
     // the exact phase's broadcast join either way.
     val distinctSurfaces = mentions.select($"surface").distinct()
-    val surfProbe = distinctSurfaces.limit(maxLocal + 1).as[String].collect()
-    val dictProbe =
-      if (surfProbe.length <= maxLocal) dict.limit(maxLocal + 1).collect()
-      else Array.empty[DictEntry]
-
-    val surfaceMap: DataFrame =
-      if (surfProbe.length <= maxLocal && dictProbe.length <= maxLocal)
-        broadcast(spark.createDataset(
-            localSurfaceMap(surfProbe, dictProbe).toSeq)
-          .toDF("surface", "entity_iri", "method"))
-      else distributedSurfaceMap(distinctSurfaces, dict)
+    val localMap = for {
+      surfaces <- LocalGate.collectAtMost(distinctSurfaces.as[String], maxLocal)
+      dictArr <- LocalGate.collectAtMost(dict, maxLocal)
+    } yield localSurfaceMap(surfaces, dictArr)
+    val surfaceMap: DataFrame = localMap match {
+      case Some(m) => broadcast(spark.createDataset(m.toSeq)
+        .toDF("surface", "entity_iri", "method"))
+      case None => distributedSurfaceMap(distinctSurfaces, dict)
+    }
 
     // ONE pass over the mention occurrence stream: a broadcast hash probe
     // on the raw surface string — no normalize, no lambdas.

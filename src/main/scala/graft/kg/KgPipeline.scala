@@ -12,11 +12,12 @@ import Model._
   * Session defaults for scale are set in [[session]]: AQE on (coalescing +
   * skew-join splitting), shuffle partitions sized to cores (overridable),
   * broadcast threshold left at default. Broadcast/local decisions in the
-  * pipeline stages are size-gated at runtime: EntityLinking collects its
-  * bestPerNorm LSH table into a broadcast local relation only under a row
-  * bound, Canonicalize switches between a driver-local union-find and the
-  * distributed large-star/small-star loop on an edge-count gate, and
-  * everything else lets AQE pick the join strategy from observed sizes.
+  * pipeline stages are size-gated at runtime through
+  * [[graft.ops.LocalGate]]: EntityLinking builds its surface map on the
+  * driver only under a row bound, Canonicalize switches between GraphOps'
+  * driver-local union-find and its distributed pointer-doubling loop on
+  * a distinct-edge gate, and everything else lets AQE pick the join
+  * strategy from observed sizes.
   */
 object KgPipeline {
 
@@ -77,7 +78,7 @@ object KgPipeline {
 
     val edges = Canonicalize.sameAsEdges(triples)
     // size-gated: driver-local union-find under the edge bound, else the
-    // distributed loop (which localCheckpoints per iteration)
+    // distributed pointer-doubling loop (which localCheckpoints per round)
     val labels = Canonicalize.connectedComponents(edges)
 
     val canonical = Canonicalize.canonicalizeTriples(triples, labels)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over co-occurrence graphs — the KG-side consumers of the
@@ -29,19 +29,6 @@ import org.apache.spark.sql.functions._
   *    drift between engines, partitionings, or replays.
   */
 object GraphOps {
-
-  /** Pin a small intermediate relation for multi-pass consumption.
-    *
-    * Deliberate deviation from the repo's no-cache-on-the-hot-path rule
-    * (BENCH.md): that rule exists for corpus-sized text relations; these
-    * are edge lists — O(m) longs, ~16 bytes/row, disk-spillable — and the
-    * triangle/CC shapes consume them 2+ times (count-gate plus collect or
-    * join fan-out). Released explicitly once the last pass completes
-    * (round-7 VERDICT #4) wherever the terminal action happens inside the
-    * operator; the above-gate join pipelines keep the GraphX idiom (cache
-    * the graph, iterate, let LRU evict). */
-  private def pinned(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Per-group member cap for [[coOccurrenceEdges]] (same role as
     * DedupOps.BUCKET_CAP): groups beyond the cap keep their `cap` smallest
@@ -92,19 +79,46 @@ object GraphOps {
     degrees(edges)
       .groupBy(col("deg").as("degree")).agg(count(lit(1)).as("n_nodes"))
 
-  /** Edge-count gate for the triangle/CC local-index fast path: below it
-    * the oriented edge list (≤ 64 MB of longs at the gate) is exactly what
-    * a broadcast join would ship to every executor anyway, so the operator
-    * collects it ONCE, builds a compact rank-relabelled CSR adjacency, and
-    * broadcasts that instead of paying 2 broadcast-hash-relation builds
-    * plus a 10·m-row wedge stream (measured 4× on the 1.2M-edge bench
-    * graph). Above it, the plan degrades to shuffled equi-joins (the only
-    * memory-safe option at 10⁹ edges). Same spirit — and the same judged
-    * precedent — as kg.Canonicalize.LOCAL_CC_MAX_EDGES: the collect is
-    * bounded by the gate, the driver does only index construction (the
-    * work it would do building a broadcast hash relation), and all
-    * counting work stays distributed. */
-  val BROADCAST_EDGE_LIMIT = 4000000L
+  /** Edge-count gate of the triangle, CC and PageRank operators. Each one
+    * fetches the edge list through [[LocalGate.collectAtMost]] (the size
+    * probe is the fetch) and, at or below the gate, runs its driver-side
+    * algorithm over the two endpoint arrays: the bytes a broadcast join
+    * would ship to every executor anyway (the triangle index was measured
+    * 4× faster than the broadcast joins on the 1.2M-edge bench graph).
+    * Above the gate each runs its shuffled-join pipeline over the raw
+    * edges, the only memory-safe option at 10⁹ edges. */
+  val BROADCAST_EDGE_LIMIT = 4000000
+
+  /** The edge list as two endpoint arrays `(us, vs)` when it has at most
+    * [[BROADCAST_EDGE_LIMIT]] rows, else `None`. */
+  private def collectEdges(edges: DataFrame): Option[(Array[Long], Array[Long])] = {
+    import edges.sparkSession.implicits._
+    LocalGate.collectAtMost(
+        edges.select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)],
+        BROADCAST_EDGE_LIMIT)
+      .map(ev => (ev.map(_._1), ev.map(_._2)))
+  }
+
+  /** Dense int relabelling of the endpoints in first-seen order:
+    * `(ids, iu, iv)` with `ids(iu(i)) == us(i)` and `ids(iv(i)) == vs(i)`. */
+  private def intern(us: Array[Long], vs: Array[Long])
+      : (Array[Long], Array[Int], Array[Int]) = {
+    // boxed value type: get must distinguish "absent" (null) from index 0
+    val idx = new java.util.HashMap[Long, java.lang.Integer]()
+    val ids = Array.newBuilder[Long]
+    def one(x: Long): Int = {
+      val cur = idx.get(x)
+      if (cur == null) {
+        val i = idx.size
+        idx.put(x, i); ids += x; i
+      } else cur.intValue()
+    }
+    val iu = new Array[Int](us.length)
+    val iv = new Array[Int](vs.length)
+    var i = 0
+    while (i < us.length) { iu(i) = one(us(i)); iv(i) = one(vs(i)); i += 1 }
+    (ids.result(), iu, iv)
+  }
 
   /** Per-node triangle counts: (n, n_triangles), nodes in ≥ 1 triangle.
     *
@@ -114,50 +128,47 @@ object GraphOps {
     * set is orientation-independent, so an id-oriented SQL oracle
     * reproduces it. Two physical paths with identical results (gate
     * scaladoc above): broadcast-CSR sorted-array intersections under the
-    * gate, oriented wedge self-join + closing equi-join above it. */
-  def triangleCounts(rawEdges: DataFrame): DataFrame = {
-    val edges = pinned(rawEdges)
-    // one action on the pinned list decides the strategy — the same
-    // measured-size-driven switch AQE makes, but against the EDGE count,
-    // which AQE cannot see past the wedge join's own output statistics
-    val m = edges.count()
-    if (m <= BROADCAST_EDGE_LIMIT) triangleCountsIndexed(edges)
-    else triangleCountsJoined(edges)
+    * gate, oriented wedge self-join + closing equi-join above it. The
+    * gate counts EDGES, which AQE cannot see past the wedge join's own
+    * output statistics. */
+  def triangleCounts(edges: DataFrame): DataFrame = collectEdges(edges) match {
+    case Some((us, vs)) => triangleCountsIndexed(edges.sparkSession, us, vs)
+    case None => triangleCountsJoined(edges)
   }
 
   /** CSR adjacency of the degree-ordered orientation: nodes relabelled to
     * their rank in ascending (degree, id) — ranks fit an Int under the
     * collect gate — with each out-neighbor list sorted ascending.
     * Returns (rankToId, offsets, neighbors). */
-  private[ops] def csrOriented(ev: Array[(Long, Long)])
+  private[ops] def csrOriented(us: Array[Long], vs: Array[Long])
       : (Array[Long], Array[Int], Array[Int]) = {
-    val degm = new java.util.HashMap[Long, Int]()
-    ev.foreach { case (u, v) =>
-      degm.merge(u, 1, _ + _); degm.merge(v, 1, _ + _)
-    }
-    val n = degm.size
-    val ids = new Array[Long](n)
+    val (ids, iu, iv) = intern(us, vs)
+    val n = ids.length
+    val m = iu.length
+    val deg = new Array[Int](n)
     var i = 0
-    val it = degm.keySet().iterator()
-    while (it.hasNext) { ids(i) = it.next(); i += 1 }
-    val rankToId = ids.sortBy(id => (degm.get(id), id))
-    val rankOf = new java.util.HashMap[Long, Int](n * 2)
+    while (i < m) { deg(iu(i)) += 1; deg(iv(i)) += 1; i += 1 }
+    val byRank = Array.range(0, n).sortBy(k => (deg(k), ids(k)))
+    val rankToId = byRank.map(ids)
+    val rankOf = new Array[Int](n)
     i = 0
-    while (i < n) { rankOf.put(rankToId(i), i); i += 1 }
+    while (i < n) { rankOf(byRank(i)) = i; i += 1 }
     val outDeg = new Array[Int](n)
-    ev.foreach { case (u, v) =>
-      val ru = rankOf.get(u); val rv = rankOf.get(v)
-      outDeg(math.min(ru, rv)) += 1
+    i = 0
+    while (i < m) {
+      outDeg(math.min(rankOf(iu(i)), rankOf(iv(i)))) += 1; i += 1
     }
     val offs = new Array[Int](n + 1)
     i = 0
     while (i < n) { offs(i + 1) = offs(i) + outDeg(i); i += 1 }
-    val nbrs = new Array[Int](ev.length)
+    val nbrs = new Array[Int](m)
     val fill = java.util.Arrays.copyOf(offs, n)
-    ev.foreach { case (u, v) =>
-      val ru = rankOf.get(u); val rv = rankOf.get(v)
+    i = 0
+    while (i < m) {
+      val ru = rankOf(iu(i)); val rv = rankOf(iv(i))
       val s = math.min(ru, rv)
       nbrs(fill(s)) = math.max(ru, rv); fill(s) += 1
+      i += 1
     }
     i = 0
     while (i < n) { java.util.Arrays.sort(nbrs, offs(i), offs(i + 1)); i += 1 }
@@ -166,15 +177,11 @@ object GraphOps {
 
   /** Under-gate path: broadcast the CSR index, intersect neighbor lists
     * distributed over hash-spread node ranges, partial-aggregate the
-    * emitted triangle corners. The collect is gate-bounded (≤ 64 MB); the
-    * edge pin is released as soon as the collect lands. */
-  private def triangleCountsIndexed(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+    * emitted triangle corners. */
+  private def triangleCountsIndexed(spark: SparkSession, us: Array[Long],
+                                    vs: Array[Long]): DataFrame = {
     import spark.implicits._
-    val ev = edges.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].collect()
-    edges.unpersist(false)
-    val (rankToId, offs, nbrs) = csrOriented(ev)
+    val (rankToId, offs, nbrs) = csrOriented(us, vs)
     val n = rankToId.length
     val bc = spark.sparkContext.broadcast((rankToId, offs, nbrs))
     spark.range(0, n.toLong)
@@ -223,10 +230,13 @@ object GraphOps {
       (col("du") === col("dv") && col("u") < col("v"))
     // oriented edge (s → d) with rank(s) < rank(d); dd = degree of d so the
     // wedge join can rank out-neighbors without re-joining the degree table
-    val oriented = pinned(withDeg.select(
+    // consumed three times below; the GraphX idiom (cache the graph,
+    // iterate, let LRU evict) on the above-gate path only
+    val oriented = withDeg.select(
       when(uLower, col("u")).otherwise(col("v")).as("s"),
       when(uLower, col("v")).otherwise(col("u")).as("d"),
-      when(uLower, col("dv")).otherwise(col("du")).as("dd")))
+      when(uLower, col("dv")).otherwise(col("du")).as("dd"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val e1 = oriented.select(col("s"), col("d").as("d1"), col("dd").as("dd1"))
     val e2 = oriented.select(col("s"), col("d").as("d2"), col("dd").as("dd2"))
     val wedges = e1.join(e2, "s")
@@ -242,66 +252,47 @@ object GraphOps {
 
   /** Connected components of an undirected edge list: (n, component) with
     * component = the SMALLEST node id in n's component — deterministic,
-    * partition-invariant, engine-independent (pure min, no float).
+    * partition-invariant, engine-independent (pure min, no float). Also the
+    * engine of kg.Canonicalize, which interns IRIs to order-preserving ids.
     *
-    * Two physical paths with identical results (the
-    * kg.Canonicalize.connectedComponents pattern, long-typed):
-    *  - ≤ [[BROADCAST_EDGE_LIMIT]] edges: one gate-bounded collect (the
-    *    bytes a broadcast join would ship anyway) + driver union-find with
-    *    path compression — the result relation is node-scale and LOCAL, so
-    *    downstream joins against it broadcast without stats guessing;
-    *  - above: hash-min propagation WITH pointer doubling — each round one
-    *    keyed join + partial-agg min shuffle, then l(n) := l(l(n)) via a
-    *    label-keyed self-join. The shortcut halves every label chain per
-    *    round, so convergence is O(log diameter) instead of O(diameter)
-    *    (a 40-node path converges in ~6 rounds where plain propagation
-    *    needs 40). The label self-join key is skewed toward popular labels
-    *    by construction — AQE skew-join splitting is on session-wide.
+    * Two physical paths with identical results:
+    *  - ≤ [[BROADCAST_EDGE_LIMIT]] edges: driver union-find with path
+    *    compression ([[localComponents]]) — the result relation is
+    *    node-scale and LOCAL, so downstream joins against it broadcast
+    *    without stats guessing;
+    *  - above: hash-min propagation WITH pointer doubling
+    *    ([[distributedComponents]]) — each round one keyed join +
+    *    partial-agg min shuffle, then l(n) := l(l(n)) via a label-keyed
+    *    self-join. The shortcut halves every label chain per round, so
+    *    convergence is O(log diameter) instead of O(diameter) (a 40-node
+    *    path converges in ~6 rounds where plain propagation needs 40). The
+    *    label self-join key is skewed toward popular labels by
+    *    construction — AQE skew-join splitting is on session-wide.
     *    localCheckpoint truncates lineage every round; the convergence
-    *    probe is an any-change limit(1).count — O(1) result, one job. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    *    probe is an any-change isEmpty — O(1) result, one job. */
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = pinned(edges.select(col("u").cast("long"), col("v").cast("long")))
-    val m = e.count()
-    if (m <= BROADCAST_EDGE_LIMIT) {
-      val ev = e.as[(Long, Long)].collect()
-      e.unpersist(false)
-      spark.createDataset(localComponents(ev).toIndexedSeq)
-        .toDF("n", "component")
-    } else {
-      val out = distributedComponents(e, maxIter)
-      // the loop's first localCheckpoint has materialized sym, so the pin
-      // has served its purpose (round-7 VERDICT #4: no pins left behind)
-      e.unpersist(false)
-      out
+    collectEdges(edges) match {
+      case Some((us, vs)) =>
+        spark.createDataset(localComponents(us, vs).toIndexedSeq)
+          .toDF("n", "component")
+      case None =>
+        distributedComponents(
+          edges.select(col("u").cast("long"), col("v").cast("long")))
     }
   }
 
   /** Driver-local union-find (path-compressed, union by size, min-id label
-    * tracked per root) over rank-relabelled int nodes. Bounded by the
-    * [[BROADCAST_EDGE_LIMIT]] gate. */
-  private[ops] def localComponents(ev: Array[(Long, Long)]): Array[(Long, Long)] = {
-    // boxed value type: get must distinguish "absent" (null) from rank 0
-    val idx = new java.util.HashMap[Long, java.lang.Integer]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def intern(x: Long): Int = {
-      val cur = idx.get(x)
-      if (cur == null) {
-        val i = ids.length
-        idx.put(x, i); ids += x; i
-      } else cur.intValue()
-    }
-    val us = new Array[Int](ev.length)
-    val vs = new Array[Int](ev.length)
-    var i = 0
-    while (i < ev.length) {
-      us(i) = intern(ev(i)._1); vs(i) = intern(ev(i)._2); i += 1
-    }
+    * tracked per root) over int-interned nodes: (n, smallest id in n's
+    * component) for every endpoint. */
+  private[graft] def localComponents(us: Array[Long],
+                                     vs: Array[Long]): Array[(Long, Long)] = {
+    val (ids, iu, iv) = intern(us, vs)
     val n = ids.length
-    val parent = Array.tabulate(n)(identity)
+    val parent = Array.range(0, n)
     val size = Array.fill(n)(1)
-    val minId = Array.tabulate(n)(ids(_))
+    val minId = ids.clone()
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) {
@@ -310,9 +301,9 @@ object GraphOps {
       }
       x
     }
-    i = 0
-    while (i < ev.length) {
-      val ra = find(us(i)); val rb = find(vs(i))
+    var i = 0
+    while (i < iu.length) {
+      val ra = find(iu(i)); val rb = find(iv(i))
       if (ra != rb) {
         val (big, small) = if (size(ra) >= size(rb)) (ra, rb) else (rb, ra)
         parent(small) = big
@@ -324,15 +315,17 @@ object GraphOps {
     Array.tabulate(n)(k => (ids(k), minId(find(k))))
   }
 
-  /** The distributed pointer-doubling loop (taken above the gate; directly
-    * callable in tests to cover the at-scale path on small inputs).
-    *
-    * Convergence bound (round-7 ADVICE): doubling halves label chains each
-    * round, so graphs of diameter up to ~2^maxIter converge; if the loop
-    * exhausts maxIter with labels still changing (a pathological
-    * longer-chain graph), the labels returned would be mid-propagation —
-    * that case logs a warning instead of passing silently. */
-  private[ops] def distributedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  /** Round cap of [[distributedComponents]]: doubling halves every label
+    * chain each round, so graphs of diameter up to ~2^20 converge. */
+  private val CC_MAX_ROUNDS = 20
+
+  /** The distributed pointer-doubling loop over BIGINT `(u, v)` edges
+    * (taken above the gate; directly callable in tests to cover the
+    * at-scale path on small inputs). If the loop exhausts
+    * [[CC_MAX_ROUNDS]] with labels still changing (a pathological
+    * longer-chain graph), the labels returned are mid-propagation — that
+    * case logs a warning instead of passing silently. */
+  private[graft] def distributedComponents(edges: DataFrame): DataFrame = {
     val sym = edges.select(col("u").as("s"), col("v").as("d"))
       .unionAll(edges.select(col("v").as("s"), col("u").as("d")))
       .localCheckpoint()
@@ -340,7 +333,7 @@ object GraphOps {
       .withColumn("l", col("n")).localCheckpoint()
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < CC_MAX_ROUNDS) {
       val nbrMin = sym.join(labels, col("s") === col("n"))
         .select(col("d").as("m"), col("l"))
         .unionAll(labels.select(col("n").as("m"), col("l")))
@@ -354,23 +347,19 @@ object GraphOps {
         .select(col("a.m").as("n"), coalesce(col("l2"), col("a.l1")).as("l"))
         .localCheckpoint()
       // round 0 always changes labels on any graph with an edge — skip
-      // the probe job there (same trick as the KG loop's iter<2 skip,
-      // conservative by one round because doubling converges faster)
-      val changed =
-        if (iter < 1) 1L
-        else next.select(col("n"), col("l").as("ln"))
-          .join(labels, "n")
-          .filter(col("ln") =!= col("l"))
-          .limit(1).count()
+      // the probe job there
+      converged = iter >= 1 && next.select(col("n"), col("l").as("ln"))
+        .join(labels, "n")
+        .filter(col("ln") =!= col("l"))
+        .isEmpty
       labels = next
-      converged = changed == 0
       iter += 1
     }
     if (!converged)
-      System.err.println(s"[graft] WARN connectedComponents: label " +
-        s"propagation still changing after maxIter=$maxIter rounds " +
-        s"(graph diameter > ~2^$maxIter?) — returned labels may be " +
-        "mid-propagation; raise maxIter")
+      System.err.println(s"[graft] WARN connectedComponents: labels still " +
+        s"changing after $CC_MAX_ROUNDS pointer-doubling rounds (graph " +
+        s"diameter > ~2^$CC_MAX_ROUNDS?) — returned labels may be " +
+        "mid-propagation")
     labels.select(col("n"), col("l").as("component"))
   }
 
@@ -383,12 +372,12 @@ object GraphOps {
     * of leaking ≤ deg·1 credit units per node per hop to rounding
     * (relative error ≤ deg/seed ≈ 10⁻⁶ at the default seed).
     *
-    * Two physical paths with identical results (the triangle/CC gate,
-    * round-8): because every hop is pure integer arithmetic and integer
-    * addition is associative-commutative, ANY evaluation order produces
-    * the same bits — so under [[BROADCAST_EDGE_LIMIT]] the operator does
-    * one gate-bounded collect of the edge list (the bytes each hop's
-    * broadcast-shaped join would ship anyway) and runs the `iters` hops
+    * Two physical paths with identical results: because every hop is
+    * pure integer arithmetic and integer addition is
+    * associative-commutative, ANY evaluation order produces the same
+    * bits — so under [[BROADCAST_EDGE_LIMIT]] the operator collects the
+    * edge list (the bytes each hop's broadcast-shaped join would ship
+    * anyway) and runs the `iters` hops
     * over int-interned arrays on the driver, replacing 3·(join +
     * partial-agg shuffle) with zero jobs after the collect. Above the
     * gate the canonical one-keyed-join + one-partial-agg-shuffle-per-hop
@@ -403,20 +392,15 @@ object GraphOps {
       "seed*(1-damping) must be integer so the per-hop base is exact")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = pinned(edges.select(col("u").cast("long"), col("v").cast("long")))
-    val m = e.count()
-    if (m <= BROADCAST_EDGE_LIMIT) {
-      val ev = e.as[(Long, Long)].collect()
-      e.unpersist(false)
-      spark.createDataset(
-          localPageRankCredits(ev, iters, seed, dampNum, dampDen).toIndexedSeq)
-        .toDF("n", "c")
-    } else {
+    collectEdges(edges) match {
+      case Some((us, vs)) =>
+        spark.createDataset(localPageRankCredits(us, vs, iters, seed, dampNum,
+            dampDen).toIndexedSeq)
+          .toDF("n", "c")
       // above the gate the joined pipeline re-derives from the raw edges
-      // (unchanged round-7 shape: per-hop exchange reuse, no pin — a cache
-      // was measured SLOWER than recompute here, 2.36 s vs 1.67 s at sf0.1)
-      e.unpersist(false)
-      pageRankCreditsJoined(edges, iters, seed, dampNum, dampDen)
+      // (per-hop exchange reuse, no pin — a cache was measured SLOWER than
+      // recompute here, 2.36 s vs 1.67 s at sf0.1)
+      case None => pageRankCreditsJoined(edges, iters, seed, dampNum, dampDen)
     }
   }
 
@@ -424,35 +408,23 @@ object GraphOps {
     * the [[BROADCAST_EDGE_LIMIT]] gate. Identical bits to the joined path:
     * base + Σ floor(c·dampNum/(dampDen·deg)) per node per hop, and integer
     * sums are order-independent. */
-  private[ops] def localPageRankCredits(ev: Array[(Long, Long)], iters: Int,
-      seed: Long, dampNum: Long, dampDen: Long): Array[(Long, Long)] = {
+  private[ops] def localPageRankCredits(us: Array[Long], vs: Array[Long],
+      iters: Int, seed: Long, dampNum: Long,
+      dampDen: Long): Array[(Long, Long)] = {
     val base = seed * (dampDen - dampNum) / dampDen
-    val idx = new java.util.HashMap[Long, java.lang.Integer]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def intern(x: Long): Int = {
-      val cur = idx.get(x)
-      if (cur == null) {
-        val i = ids.length
-        idx.put(x, i); ids += x; i
-      } else cur.intValue()
-    }
-    val us = new Array[Int](ev.length)
-    val vs = new Array[Int](ev.length)
-    var i = 0
-    while (i < ev.length) {
-      us(i) = intern(ev(i)._1); vs(i) = intern(ev(i)._2); i += 1
-    }
+    val (ids, iu, iv) = intern(us, vs)
     val n = ids.length
+    val m = iu.length
     val deg = new Array[Long](n)
-    i = 0
-    while (i < ev.length) { deg(us(i)) += 1; deg(vs(i)) += 1; i += 1 }
+    var i = 0
+    while (i < m) { deg(iu(i)) += 1; deg(iv(i)) += 1; i += 1 }
     var credit = Array.fill(n)(seed)
     var hop = 0
     while (hop < iters) {
       val inc = new Array[Long](n)
       i = 0
-      while (i < ev.length) {
-        val a = us(i); val b = vs(i)
+      while (i < m) {
+        val a = iu(i); val b = iv(i)
         // Long '/' truncates toward zero == floor for positive operands,
         // matching the joined path's BIGINT DIV
         inc(b) += credit(a) * dampNum / (dampDen * deg(a))

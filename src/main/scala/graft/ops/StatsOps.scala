@@ -21,8 +21,12 @@ object StatsOps {
                                    op: String): Unit = {
     import org.apache.spark.sql.types._
     val dt = df.schema(valueCol).dataType
-    require(Seq[DataType](ByteType, ShortType, IntegerType, LongType)
-        .contains(dt),
+    val integral = dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.scale == 0
+      case _ => false
+    }
+    require(integral,
       s"$op: value column '$valueCol' must be integral, got $dt — the " +
       "histogram scale premise (distinct values << rows) does not hold " +
       "for continuous columns; quantize or bucket the column first")

@@ -55,6 +55,31 @@ object KgOracleGen {
 
   val PAGES = 5000L // sf0.01 (PagesSource.countForSfDir)
 
+  /** Every vertex of an undirected string graph labelled with the smallest
+    * member of its component, by union-find in code-point order — the
+    * order of UTF-8 bytes and of SQL `min` over strings (Java's `<` on
+    * String compares UTF-16 units, which differs above U+FFFF). The
+    * reference labelling for kg_canonical and the CC specs. */
+  def minLabelComponents(edges: Iterable[(String, String)]): Map[String, String] = {
+    def less(a: String, b: String): Boolean =
+      java.util.Arrays.compare(a.codePoints().toArray, b.codePoints().toArray) < 0
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    for ((a, b) <- edges) {
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
   // ------------------------------------------------------------- SQL emit
 
   def sqlStr(s: String): String =
@@ -285,10 +310,10 @@ object KgOracleGen {
       asserts += 2
     }
 
-    // components via union-find over the sameAs edges (when anchored, the
-    // edge set is proven identical to the reference's above) — independent
-    // of the Spark CC implementation under test
-    val canonical = Canonicalize.localUnionFind(edges.result().distinct.toArray)
+    // components via this file's own union-find over the sameAs edges
+    // (when anchored, the edge set is proven identical to the reference's
+    // above) — independent of the CC implementation under test
+    val canonical = minLabelComponents(edges.result().distinct)
 
     val tripleCols = Seq("url" -> "VARCHAR", "block" -> "INTEGER",
       "subj" -> "VARCHAR", "subj_kind" -> "VARCHAR", "pred" -> "VARCHAR",

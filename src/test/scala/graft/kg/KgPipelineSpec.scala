@@ -85,20 +85,20 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(local.nonEmpty && local == dist)
   }
 
+  private def ccLabels(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+    df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
   test("connected components: aliases collapse to canonical ids") {
     import spark.implicits._
     val edges = Seq(
       ("a", "b"), ("b", "c"), // component {a,b,c}
       ("x", "y"), // component {x,y}
       ("q", "q")).toDF("src", "dst")
-    val labels = Canonicalize.connectedComponents(edges).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val labels = ccLabels(Canonicalize.connectedComponents(edges))
     assert(labels("a") == "a" && labels("b") == "a" && labels("c") == "a")
     assert(labels("x") == "x" && labels("y") == "x")
     // the at-scale distributed loop must produce the identical labeling
-    val dist = Canonicalize.distributedCC(edges).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(dist == labels)
+    assert(ccLabels(Canonicalize.distributedCC(edges)) == labels)
   }
 
   test("local and distributed CC agree on a chain (multi-iteration case)") {
@@ -107,12 +107,42 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must converge to min-vertex labeling
     val vs = (0 until 12).map(i => f"v$i%02d")
     val edges = vs.zip(vs.tail).toDF("src", "dst")
-    val local = Canonicalize.connectedComponents(edges).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val dist = Canonicalize.distributedCC(edges).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(local == dist)
+    val local = ccLabels(Canonicalize.connectedComponents(edges))
+    assert(ccLabels(Canonicalize.distributedCC(edges)) == local)
     assert(vs.forall(v => local(v) == "v00"))
+  }
+
+  test("both CC paths pick the smallest IRI in UTF-8 byte order") {
+    import org.apache.spark.sql.functions.min
+    import spark.implicits._
+    // UTF-16 units put the emoji (surrogate 0xD83D) before the fullwidth
+    // A (0xFF21); UTF-8 bytes (0xF0.. vs 0xEF..) and SQL min put A first
+    val fullA = "http://e/\uFF21"
+    val emoji = "http://e/\uD83D\uDE00"
+    assert(Seq(emoji, fullA).toDF("s").agg(min($"s")).head().getString(0) == fullA)
+    val edges = Seq((emoji, fullA)).toDF("src", "dst")
+    val want = Map(fullA -> fullA, emoji -> fullA)
+    assert(ccLabels(Canonicalize.connectedComponents(edges)) == want)
+    assert(ccLabels(Canonicalize.distributedCC(edges)) == want)
+  }
+
+  test("local and distributed CC match the reference on random string graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    // high-BMP and astral code points only, so the UTF-16 order (astral
+    // surrogates 0xD8xx sort below 0xFF21) and the UTF-8 order disagree
+    val alphabet = Seq("\u4E2D", "\uFF21", "\uFF3A", "\uD83D\uDE00",
+      "\uD835\uDC00")
+    val names = (0 until 40).map(_ =>
+      "http://e/" + Seq.fill(1 + rnd.nextInt(3))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+      .distinct
+    for (trial <- 1 to 3) {
+      val es = Seq.fill(30)((names(rnd.nextInt(names.size)), names(rnd.nextInt(names.size))))
+      val edges = es.toDF("src", "dst").repartition(3)
+      val want = KgOracleGen.minLabelComponents(es)
+      assert(ccLabels(Canonicalize.connectedComponents(edges)) == want, s"trial $trial")
+      assert(ccLabels(Canonicalize.distributedCC(edges)) == want, s"trial $trial")
+    }
   }
 
   test("canonicalizeTriples size-gates the label join (no forced broadcast)") {

@@ -601,6 +601,21 @@ class OpsSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("must be integral"))
   }
 
+  test("histogram stats accept DECIMAL(p, 0) and reject DECIMAL(p, 2)") {
+    import spark.implicits._
+    val rows = Seq(("a", 1L), ("a", 2L), ("a", 2L), ("a", 4L)).toDF("g", "v")
+    val dec0 = rows.select(col("g"), col("v").cast("decimal(20,0)").as("v"))
+    val median = StatsOps.groupQuantiles(dec0, "g", "v", Seq(500))
+      .collect().map(r => r.getDecimal(2).longValueExact())
+    assert(median.toSeq == Seq(2L))
+    assert(StatsOps.percentileRanks(dec0, "g", "v").count() == 4)
+    val dec2 = rows.select(col("g"), col("v").cast("decimal(10,2)").as("v"))
+    val e = intercept[IllegalArgumentException] {
+      StatsOps.groupQuantiles(dec2, "g", "v")
+    }
+    assert(e.getMessage.contains("must be integral"))
+  }
+
   test("budgetSelect: inclusive prefix per source, text never shuffles") {
     import spark.implicits._
     val df = Seq(
