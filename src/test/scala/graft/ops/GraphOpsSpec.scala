@@ -219,6 +219,19 @@ class GraphOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("size gate rejects a negative or Int.MaxValue max before probing") {
+    import graft.kg.{EntityLinking, PagesSource}
+    val mentions = spark.range(0, 4).select(col("id").cast("string").as("url"),
+      lit("Ada Lovelace").as("surface"))
+    for (max <- Seq(-1, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](
+        LocalGate.collectAtMost(spark.range(0, 4), max))
+      assert(e.getMessage.contains("'max'") && e.getMessage.contains(s"got $max"))
+      intercept[IllegalArgumentException](EntityLinking.link(mentions,
+        PagesSource.dictionary(spark), maxLocal = max))
+    }
+  }
+
   test("triangle plan: keyed equi-joins only, no cartesian product") {
     // the above-gate join pipeline is the shape that must never degenerate
     val plan = GraphOps.triangleCountsJoined(edges)
