@@ -165,12 +165,39 @@ object DedupOps {
       (b, h)
     }
 
-  /** Exact Jaccard of two shingle sets. */
-  def jaccardSets(a: Array[String], b: Array[String]): Double = {
-    val sa = a.toSet
-    val sb = b.toSet
-    val inter = sa.intersect(sb).size
-    val union = sa.size + sb.size - inter
+  /** Exact Jaccard of two shingle sets (duplicates within an array count
+    * once). */
+  def jaccardSets(a: Array[String], b: Array[String]): Double =
+    jaccardPrepared(prepareSet(a), prepareSet(b))
+
+  /** A shingle array as a prepared set for [[jaccardPrepared]]: sorted by
+    * `String.compareTo`, duplicate-free. Prepare a set once and verify it
+    * against many candidates without rebuilding it. */
+  def prepareSet(sh: Array[String]): Array[String] = {
+    val s = sh.clone()
+    java.util.Arrays.sort(s.asInstanceOf[Array[AnyRef]])
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      if (n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+      i += 1
+    }
+    if (n == s.length) s else java.util.Arrays.copyOf(s, n)
+  }
+
+  /** Exact Jaccard of two prepared sets by merge intersection:
+    * inter / (|a| + |b| - inter), 0.0 when both are empty. */
+  def jaccardPrepared(a: Array[String], b: Array[String]): Double = {
+    var inter = 0
+    var i = 0
+    var j = 0
+    while (i < a.length && j < b.length) {
+      val c = a(i).compareTo(b(j))
+      if (c == 0) { inter += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    val union = a.length + b.length - inter
     if (union == 0) 0.0 else inter.toDouble / union
   }
 

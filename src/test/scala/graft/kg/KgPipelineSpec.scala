@@ -85,6 +85,58 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(local.nonEmpty && local == dist)
   }
 
+  test("entity linking: local and distributed paths agree on an adversarial dictionary") {
+    import spark.implicits._
+    val dict = Seq(
+      Model.DictEntry("alpha beta", "http://e/ab"),
+      Model.DictEntry("alpha beta", "http://e/ab"), // duplicate row
+      Model.DictEntry("alpha beta", "http://e/ab2"), // same norm, second IRI
+      // four IRIs tie at Jaccard 8/9 for the norm "gamma delt"; the largest
+      // in UTF-8 byte order (Spark's string order) is the emoji, while
+      // UTF-16 order would pick the fullwidth A
+      Model.DictEntry("gamma deltx", "http://e/t1"),
+      Model.DictEntry("gamma deltz", "http://e/t2"),
+      Model.DictEntry("gamma delty", "http://e/\uFF21"),
+      Model.DictEntry("gamma deltw", "http://e/\uD83D\uDE00"),
+      Model.DictEntry("x yz", "http://e/short"),
+      Model.DictEntry("", "http://e/empty"),
+      Model.DictEntry("caf\u00e9 ol\u00e9", "http://e/cafe"),
+      Model.DictEntry("\uD840\uDC00\uD840\uDC01", "http://e/cjk"),
+      Model.DictEntry("\uD840\uDC00\uD840\uDC01 z", "http://e/cjkz"))
+    val surfaces = Seq("Alpha Beta", "alpha-beta!", "Gamma-Delt", "X y",
+      "x.y.z", "!!!", "", "ab", "Caf\u00e9 Ol\u00e9", "CAF\u00c9 OLA",
+      "\uD840\uDC00\uD840\uDC01!", "\uD840\uDC02\uD840\uDC03", "\uD840\uDC00\uD840\uDC01 y",
+      "\uD835\uDC00\uD835\uDC01 7", "7")
+    val m = surfaces.zipWithIndex.map { case (s, i) => (s"http://p/$i", s) }
+      .toDF("url", "surface")
+    val ds = spark.createDataset(dict)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .as[(String, String, String, String)].collect().sorted.toSeq
+    val local = rows(EntityLinking.link(m, ds))
+    val dist = rows(EntityLinking.link(m, ds, maxLocal = 0))
+    assert(local == dist)
+    def links(s: String) = local.filter(_._2 == s).map(r => (r._3, r._4))
+    assert(links("Alpha Beta") ==
+      Seq(("http://e/ab", "exact"), ("http://e/ab", "exact"), ("http://e/ab2", "exact")))
+    assert(links("Gamma-Delt") == Seq(("http://e/\uD83D\uDE00", "lsh")))
+    assert(links("!!!") == Seq(("http://e/empty", "exact")))
+    assert(links("\uD840\uDC00\uD840\uDC01!") == Seq(("http://e/cjk", "exact")))
+    assert(links("\uD840\uDC02\uD840\uDC03").isEmpty)
+  }
+
+  test("normalize classifies code points: astral letters and digits survive") {
+    val cjk = "\uD840\uDC00\uD840\uDC01" // two CJK Extension B ideographs
+    assert(EntityLinking.normalize(cjk) == cjk)
+    assert(EntityLinking.normalize("\uD840\uDC02\uD840\uDC03") != EntityLinking.normalize(cjk))
+    // mathematical bold A and B have no lower-case mapping
+    assert(EntityLinking.normalize("\uD835\uDC00\uD835\uDC01  7!") == "\uD835\uDC00\uD835\uDC01 7")
+    // an unpaired surrogate is still not a letter
+    assert(EntityLinking.normalize("a\uD840b") == "a b")
+    // distinct astral names no longer exact-match each other's entries
+    val dict = Array(Model.DictEntry(EntityLinking.normalize(cjk), "http://e/cjk"))
+    assert(EntityLinking.localSurfaceMap(Array("\uD840\uDC02\uD840\uDC03"), dict).isEmpty)
+  }
+
   private def ccLabels(df: org.apache.spark.sql.DataFrame): Map[String, String] =
     df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 

@@ -101,6 +101,32 @@ class OpsSpec extends AnyFunSuite {
       s"recall ${found.toDouble / injected.length}")
   }
 
+  test("prepared-set Jaccard equals the set-algebra definition exactly") {
+    // small code-point pool so random arrays overlap and repeat: ASCII,
+    // BMP non-ASCII, the fullwidth A above the surrogate block, and two
+    // astral (surrogate-pair) letters
+    val pool = Array("a", "b", "\u00e9", "\u65e5", "\uFF21", "\uD840\uDC00",
+      "\uD835\uDC00")
+    val rnd = new scala.util.Random(42L)
+    def str(): String = Seq.fill(rnd.nextInt(3))(pool(rnd.nextInt(pool.length))).mkString
+    def arr(): Array[String] = Array.fill(rnd.nextInt(7))(str())
+    val fixed = Seq(Array.empty[String], graft.kg.EntityLinking.shingles(""),
+      Array("", ""), graft.kg.EntityLinking.shingles("\uD840\uDC00\uD840\uDC01 7"),
+      Array("\uD840", "\uDC00", "\uD840\uDC00"))
+    val pairs = (for (a <- fixed; b <- fixed) yield (a, b)) ++
+      Seq.fill(5000)((arr(), arr()))
+    pairs.foreach { case (a, b) =>
+      val (sa, sb) = (a.toSet, b.toSet)
+      val expected =
+        if ((sa | sb).isEmpty) 0.0 else (sa & sb).size.toDouble / (sa | sb).size
+      val pa = DedupOps.prepareSet(a)
+      assert(pa.toSeq == sa.toSeq.sorted, a.mkString("[", ",", "]"))
+      assert(DedupOps.jaccardPrepared(pa, DedupOps.prepareSet(b)) == expected,
+        s"${a.mkString("[", ",", "]")} vs ${b.mkString("[", ",", "]")}")
+      assert(DedupOps.jaccardSets(a, b) == expected)
+    }
+  }
+
   test("LSH bucket cap bounds a hot bucket (10k identical docs) without losing recall") {
     import spark.implicits._
     // Common-Crawl shape: a massive exact-duplicate boilerplate cluster.
