@@ -12,8 +12,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.SparkSessionExtensions
 
-import graft.turtle.{Ast, TurtleParser, TurtleSerializer, TripleProducer}
-import graft.turtle.TripleProducer.{TIri, TBnode, TLit}
+import graft.turtle.{Ast, TripleRows, TurtleParser, TurtleSerializer}
 
 /** SQL-level Turtle functions — the custom-Catalyst tier of SURVEY.md §7:
   * a scalar `Expression` with whole-stage codegen (b-tier) and a `Generator`
@@ -121,38 +120,13 @@ case class ParseTurtleTriples(text: Expression, url: Expression)
       case null => ""
       case v    => v.toString
     }
-    val doc = t.toString
     val urlHash = graft.kg.PagesSource.fnv64(urlStr)
-    def bn(id: Int): String =
-      "_:h" + java.lang.Long.toHexString(urlHash) + "_" + id
-    def errRow(msg: String): InternalRow =
-      new GenericInternalRow(Array[Any](null, null, null, null, null, null,
-        null, u(msg)))
-
-    TurtleParser.parseFull(doc) match {
-      case Left(TurtleParser.NotFullyParsed(rest)) =>
-        Seq(errRow("NotFullyParsed: " + rest.take(64)))
-      case Left(e) => Seq(errRow(e.toString.take(128)))
-      case Right(ast) =>
-        TripleProducer.produce(ast) match {
-          case Left(err) => Seq(errRow("ProduceError: " + err.take(128)))
-          case Right(ts) =>
-            ts.distinct.map { tr =>
-              val (s, sk) = tr.subj match {
-                case TIri(i)    => (i, "iri")
-                case TBnode(id) => (bn(id), "bnode")
-                case _          => (null, null)
-              }
-              val (ok, ov, od, ol) = tr.obj match {
-                case TIri(i)       => ("iri", i, null, null)
-                case TBnode(id)    => ("bnode", bn(id), null, null)
-                case TLit(l, d, g) => ("literal", l, d.orNull, g.orNull)
-              }
-              new GenericInternalRow(Array[Any](u(s), u(sk), u(tr.pred),
-                u(ok), u(ov), u(od), u(ol), null)): InternalRow
-            }
-        }
-    }
+    TripleRows.encode(t.toString,
+        id => "_:h" + java.lang.Long.toHexString(urlHash) + "_" + id)(
+      (s, sk, p, ok, ov, od, ol) => new GenericInternalRow(Array[Any](u(s),
+        u(sk), u(p), u(ok), u(ov), u(od), u(ol), null)),
+      msg => new GenericInternalRow(Array[Any](null, null, null, null, null,
+        null, null, u(msg))))
   }
 
   override protected def withNewChildrenInternal(

@@ -103,14 +103,6 @@ object Materialize {
     val spark = triples.sparkSession
     import spark.implicits._
 
-    val profile = sys.env.contains("GRAFT_MAT_PROFILE")
-    var tPrev = System.nanoTime()
-    def phase(name: String): Unit = if (profile) {
-      val now = System.nanoTime()
-      System.err.println(f"MATPHASE $name%-16s ${(now - tPrev) / 1e9}%7.2f s")
-      tPrev = now
-    }
-
     val hfs = fs(spark, outDir)
     val (manifestBuckets, done) = readManifestFull(outDir)
     // numBuckets resolution order: manifest > write-once sidecar > caller >
@@ -164,7 +156,6 @@ object Materialize {
       // file per bucket, no per-group recompute of the upstream pipeline
       val staging = s"$outDir/_staging"
       hfs.delete(new Path(staging), true)
-      phase("cleanup")
       // partitionBy plans a per-task SORT on the partition column unless
       // concurrent writers are allowed; after repartitionByBucketIdentity
       // every task holds exactly ONE bucket value, so that sort orders rows
@@ -184,7 +175,6 @@ object Materialize {
         case Some(v) => spark.conf.set(cwKey, v)
         case None    => spark.conf.unset(cwKey)
       }
-      phase("staging_write")
 
       // commit in groups: rename staged bucket dirs into the final table,
       // then advance the manifest — partition-level progress survives a
@@ -212,7 +202,6 @@ object Materialize {
         writeManifest(outDir, nb, committed)
       }
       hfs.delete(new Path(staging), true)
-      phase("commit_renames")
     }
 
     // per-bucket lineage (counts of pages/blocks/triples/errors), computed
@@ -251,12 +240,10 @@ object Materialize {
         sum($"t").as("triples"),
         sum($"e").as("errors"))
       .as[(Int, Long, Long, Long, Long)].collect().toSeq
-    phase("lineage_agg")
     val lineage = spark.createDataset(lineageRows)
       .toDF("bucket", "pages", "blocks", "triples", "errors")
     lineage.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/_lineage")
-    phase("lineage_write")
     lineage
   }
 
@@ -288,27 +275,27 @@ object Materialize {
         .getBytes(StandardCharsets.UTF_8))
       finally out.close()
       if (hfs.exists(f)) hfs.delete(f, false) // corrupt leftover
-      hfs.rename(tmp, f)
-      ()
+      if (!hfs.rename(tmp, f))
+        throw new java.io.IOException(s"bucket sidecar rename failed: $tmp -> $f")
     }
   }
 
-  private def readBucketSidecar(outDir: String): Option[Int] = {
-    val f = new Path(outDir, "_buckets.json")
+  /** The whole of a small metadata file as UTF-8, or None when it does not
+    * exist. */
+  private def readSmallFile(f: Path): Option[String] = {
     val hfs = f.getFileSystem(hadoopConf)
     if (!hfs.exists(f)) None
     else {
       val in = hfs.open(f)
-      val s = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
     }
   }
+
+  private def readBucketSidecar(outDir: String): Option[Int] =
+    readSmallFile(new Path(outDir, "_buckets.json")).flatMap { s =>
+      "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
+    }
 
   /** Manifest = commit point. Written to a temp file then atomically renamed. */
   def writeManifest(outDir: String, numBuckets: Int, buckets: Set[Int]): Unit = {
@@ -333,26 +320,16 @@ object Materialize {
   def readManifest(outDir: String): Set[Int] = readManifestFull(outDir)._2
 
   /** (numBuckets if a manifest exists, completed buckets). */
-  def readManifestFull(outDir: String): (Option[Int], Set[Int]) = {
-    val f = new Path(outDir, "_manifest.json")
-    val hfs = f.getFileSystem(hadoopConf)
-    if (!hfs.exists(f)) (None, Set.empty)
-    else {
-      val in = hfs.open(f)
-      val s = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      val nb = "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      val done = "\"completedBuckets\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
-        .map(_.group(1)).filter(_.nonEmpty)
-        .map(_.split(",").map(_.toInt).toSet).getOrElse(Set.empty)
-      (nb, done)
+  def readManifestFull(outDir: String): (Option[Int], Set[Int]) =
+    readSmallFile(new Path(outDir, "_manifest.json")) match {
+      case None => (None, Set.empty)
+      case Some(s) =>
+        val nb = "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
+        val done = "\"completedBuckets\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
+          .map(_.group(1)).filter(_.nonEmpty)
+          .map(_.split(",").map(_.toInt).toSet).getOrElse(Set.empty)
+        (nb, done)
     }
-  }
 
   def readTriples(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/triples")

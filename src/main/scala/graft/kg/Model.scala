@@ -40,19 +40,4 @@ object Model {
 
   /** Dictionary entry for entity linking (broadcast side). */
   final case class DictEntry(surface: String, entity_iri: String)
-
-  /** Linked mention (after broadcast-join + LSH fallback). */
-  final case class LinkedMention(
-      url: String,
-      surface: String,
-      entity_iri: String,
-      method: String) // exact | lsh
-
-  /** Per-partition lineage record written next to the triple table. */
-  final case class LineageRow(
-      bucket: Int,
-      pages: Long,
-      blocks: Long,
-      triples: Long,
-      errors: Long)
 }

@@ -44,7 +44,6 @@ object PagesSource {
   }
 
   def entityIri(e: Int): String = ENTITY_NS + e
-  def entitySurface(e: Int): String = s"entity $e"
 
   /** Surface-form variants for the linking dictionary and for mention
     * generation. Variant 0 is canonical; the rest exercise normalization and

@@ -1,8 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.turtle.{TurtleParser, TurtleSerializer, TripleProducer}
-import graft.turtle.TripleProducer.{TIri, TBnode, TLit}
+import graft.turtle.{TripleRows, TurtleParser, TurtleSerializer}
 import Model._
 
 /** Parse + triple-produce stage: `Dataset[Page] → Dataset[TripleRow]`
@@ -15,7 +14,7 @@ import Model._
   */
 object TripleExtraction {
 
-  /** Render one producer term into flat columns. */
+  /** Blank-node label, unique per (page, block). */
   private def bnodeLabel(urlHash: Long, block: Int, id: Int): String =
     "_:h" + java.lang.Long.toHexString(urlHash) + "b" + block + "_" + id
 
@@ -23,41 +22,9 @@ object TripleExtraction {
     val blocks = Extract.extractBlocks(page.html)
     val urlHash = PagesSource.fnv64(page.url)
     blocks.iterator.zipWithIndex.flatMap { case (block, bi) =>
-      TurtleParser.parseFull(block) match {
-        case Left(err) =>
-          Iterator.single(TripleRow(page.url, bi, null, null, null, null,
-            null, null, null,
-            err match {
-              case TurtleParser.NotFullyParsed(rest) =>
-                "NotFullyParsed: " + rest.take(64)
-              case e => e.toString.take(128)
-            }))
-        case Right(doc) =>
-          TripleProducer.produce(doc) match {
-            case Left(err) =>
-              Iterator.single(TripleRow(page.url, bi, null, null, null, null,
-                null, null, null, "ProduceError: " + err.take(128)))
-            case Right(ts) =>
-              // per-document dedup: the triple identity key includes
-              // (url, block), so duplicates can only occur WITHIN a
-              // document — deduplicating here (a few hundred rows in
-              // memory) replaces a cluster-wide sort/shuffle dedup at
-              // materialization time
-              ts.distinct.iterator.map { t =>
-                val (s, sk) = t.subj match {
-                  case TIri(i)    => (i, "iri")
-                  case TBnode(id) => (bnodeLabel(urlHash, bi, id), "bnode")
-                  case _          => (null, null) // literal subject impossible
-                }
-                val (ok, ov, od, ol) = t.obj match {
-                  case TIri(i)       => ("iri", i, null, null)
-                  case TBnode(id)    => ("bnode", bnodeLabel(urlHash, bi, id), null, null)
-                  case TLit(l, d, g) => ("literal", l, d.orNull, g.orNull)
-                }
-                TripleRow(page.url, bi, s, sk, t.pred, ok, ov, od, ol, null)
-              }
-          }
-      }
+      TripleRows.encode(block, bnodeLabel(urlHash, bi, _))(
+        TripleRow(page.url, bi, _, _, _, _, _, _, _, null),
+        TripleRow(page.url, bi, null, null, null, null, null, null, null, _))
     }
   }
 

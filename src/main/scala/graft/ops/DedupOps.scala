@@ -208,10 +208,7 @@ object DedupOps {
     val spark = documents.sparkSession
     import spark.implicits._
 
-    // shingling + 16-hash minhash per document is the heavy narrow work —
-    // widen off the single-row-group bench scan (inert at scale, see Par)
-    val docs = Par.widen(documents.select($"doc_id".cast("long"), $"text"),
-      $"doc_id").as[(Long, String)]
+    val docs = documents.select($"doc_id".cast("long"), $"text").as[(Long, String)]
     val bandsDs = docs.flatMap { case (id, text) =>
       val sig = minhashSig(wordShingles(text))
       bandKeys(sig, NUM_BANDS, BAND_ROWS).iterator.map { case (b, h) => (id, b, h) }
@@ -317,10 +314,7 @@ object DedupOps {
   def simhashDedup(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    // the 64-bit-per-token signature map is the heavy narrow work — widen
-    // off the single-row-group bench scan (inert at scale, see Par)
-    val sigs = Par.widen(documents.select($"doc_id".cast("long"), $"text"),
-        $"doc_id")
+    val sigs = documents.select($"doc_id".cast("long"), $"text")
       .as[(Long, String)]
       .map { case (id, t) => (id, simhash64(t)) }
       .toDF("doc_id", "sig")
@@ -446,8 +440,7 @@ object DedupOps {
   def duplicatedSpans(documents: DataFrame, k: Int = 10): DataFrame = {
     require(k >= 2, s"span width must be >= 2 tokens, got $k")
     val toks = col("toks")
-    Par.widen(documents.select(col("doc_id"), col("text")), col("doc_id"))
-      .select(col("doc_id"), TextOps.normTokens(col("text")).as("toks"))
+    documents.select(col("doc_id"), TextOps.normTokens(col("text")).as("toks"))
       .where(size(toks) >= k)
       .select(col("doc_id"), explode(
         transform(sequence(lit(1), size(toks) - (k - 1)),
@@ -482,11 +475,8 @@ object DedupOps {
     // membership probe — read the same Exchange (ReusedExchange; without
     // it each branch re-derived the spans from its own corpus scan). The
     // census aggregation and the semi join are already clustered by
-    // span_md5 after that exchange, so neither adds a shuffle of the span
-    // table; [[Par.widen]] parallelizes the generation itself off the
-    // single-row-group bench scan (inert at scale — see Par).
-    val spans = Par.widen(documents.select(col("doc_id"), col("text")),
-        col("doc_id"))
+    // span_md5 after that exchange, so neither adds a shuffle of the spans.
+    val spans = documents
       .select(col("doc_id"), TextOps.normTokens(col("text")).as("toks"))
       .where(size(toks) >= k)
       .select(col("doc_id"), size(toks).cast("long").as("n_tokens"),

@@ -38,18 +38,14 @@ object GraphOps {
   val GROUP_CAP = 256
 
   /** Undirected co-occurrence edges from a (group, item) membership table:
-    * `u < v` iff some group contains both. One aggregation shuffle (the
-    * bounded min-k per group), pair generation narrow via posexplode over
-    * the sorted kept array, then one distinct shuffle on the edge key.
-    * The input is [[Par.widen]]ed: the bench tables are single-row-group
-    * parquet whose scan is one task, and the distinct/min-k partial
-    * aggregation otherwise serializes on it (inert at scale — see Par). */
+    * `u < v` iff some group contains both. A distinct on the membership
+    * pair and the bounded min-k per group (one shuffle each), pair
+    * generation narrow via posexplode over the sorted kept array, then one
+    * distinct shuffle on the edge key. */
   def coOccurrenceEdges(memberships: DataFrame, groupCol: String,
                         itemCol: String, cap: Int = GROUP_CAP): DataFrame = {
     val minK = udaf(new BoundedMinK(cap))
-    Par.widen(
-        memberships.select(col(groupCol).as("g"), col(itemCol).cast("long").as("it")),
-        col("g"))
+    memberships.select(col(groupCol).as("g"), col(itemCol).cast("long").as("it"))
       .distinct()
       .groupBy(col("g")).agg(minK(col("it")).as("mk"))
       .select(col("mk").getField("ids").as("items"))

@@ -119,8 +119,6 @@ object TextOps {
     * AQE broadcasts the final join: stopword skew in tf never crosses the
     * wire. `minDf` prunes hapax noise before the join. */
   def docTermStats(documents: DataFrame, minDf: Long = 2L): DataFrame = {
-    // NOT widened (Par): A/B at sf0.1 read 0.80 s widened vs 0.73 s not —
-    // a bare token explode is cheaper than the extra exchange+stage
     val tf = documents
       .select(col("doc_id"), explode(normTokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -159,8 +157,6 @@ object TextOps {
     // materialize the token array as a column BEFORE the higher-order
     // lambdas: subexpressions are not eliminated across transform()
     // boundaries (same lesson as the trigram query — 13 s → 0.4 s).
-    // NOT widened (Par): A/B at sf0.1 read 0.75 s widened vs 0.60 s not —
-    // the bigram structs are column references, not string builds
     val toks = documents.select(normTokens(col("text")).as("t"))
     val t = col("t")
     val bigrams = when(size(t) >= 2,
@@ -211,8 +207,7 @@ object TextOps {
         i => concat_ws(" ", element_at(col("t"), i),
           element_at(col("t"), i + 1), element_at(col("t"), i + 2))))
       .otherwise(array().cast("array<string>"))
-    def docTris(df: DataFrame) = Par.widen(
-        df.select(col("doc_id"), col("text")), col("doc_id"))
+    def docTris(df: DataFrame) = df
       .select(col("doc_id"), toks.as("t"))
       .select(col("doc_id"), explode(tris).as("tri"))
     val corpus = docTris(documents)
@@ -365,10 +360,7 @@ object TextOps {
   def winnowFingerprints(documents: DataFrame, k: Int = 8, w: Int = 16): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    // rolling-hash winnowing is the heaviest per-row text op — widen off
-    // the single-row-group bench scan (inert at scale, see Par)
-    Par.widen(documents.select(col("doc_id").cast("long"), col("text")),
-        col("doc_id"))
+    documents.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, t) => winnow(t, k, w).iterator.map(f => (id, f)) }
       .toDF("doc_id", "fp")

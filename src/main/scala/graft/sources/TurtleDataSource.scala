@@ -14,8 +14,7 @@ import java.nio.charset.StandardCharsets
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
-import graft.turtle.{TurtleParser, TripleProducer}
-import graft.turtle.TripleProducer.{TIri, TBnode, TLit}
+import graft.turtle.TripleRows
 
 /** DataSource V2 reader for Turtle documents:
   * `spark.read.format("turtle").load("/path/to/dir-or-file.ttl")` yields one
@@ -177,33 +176,10 @@ object TurtleDataSource {
     */
   def rowsForDocument(file: String, text: String): Iterator[Array[String]] = {
     val contentHash = graft.kg.PagesSource.fnv64(text)
-    def bn(id: Int): String =
-      "_:h" + java.lang.Long.toHexString(contentHash) + "_" + id
-    def errRow(msg: String): Array[String] =
-      Array(file, null, null, null, null, null, null, null, msg)
-    TurtleParser.parseFull(text) match {
-      case Left(TurtleParser.NotFullyParsed(rest)) =>
-        Iterator.single(errRow("NotFullyParsed: " + rest.take(64)))
-      case Left(e) => Iterator.single(errRow(e.toString.take(128)))
-      case Right(doc) =>
-        TripleProducer.produce(doc) match {
-          case Left(err) => Iterator.single(errRow("ProduceError: " + err.take(128)))
-          case Right(ts) =>
-            ts.distinct.iterator.map { tr =>
-              val (s, sk) = tr.subj match {
-                case TIri(i)    => (i, "iri")
-                case TBnode(id) => (bn(id), "bnode")
-                case _          => (null, null)
-              }
-              val (ok, ov, od, ol) = tr.obj match {
-                case TIri(i)       => ("iri", i, null, null)
-                case TBnode(id)    => ("bnode", bn(id), null, null)
-                case TLit(l, d, g) => ("literal", l, d.orNull, g.orNull)
-              }
-              Array(file, s, sk, tr.pred, ok, ov, od, ol, null)
-            }
-        }
-    }
+    TripleRows.encode(text,
+        id => "_:h" + java.lang.Long.toHexString(contentHash) + "_" + id)(
+      (s, sk, p, ok, ov, od, ol) => Array(file, s, sk, p, ok, ov, od, ol, null),
+      msg => Array(file, null, null, null, null, null, null, null, msg))
   }
 }
 

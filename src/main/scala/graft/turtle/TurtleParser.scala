@@ -40,9 +40,10 @@ import Ast._
   */
 object TurtleParser {
 
+  /** Why [[parseFull]] refused its input. The lenient parse always
+    * succeeds on some prefix (possibly empty), so the one failure is an
+    * unconsumed remainder. */
   sealed trait ParseFailure extends Product with Serializable
-  /** No parse at all / malformed prefix of input. */
-  final case class SyntaxError(msg: String) extends ParseFailure
   /** Document parsed but input remains (lib.rs:41-44). */
   final case class NotFullyParsed(remainder: String) extends ParseFailure
 

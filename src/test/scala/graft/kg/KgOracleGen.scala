@@ -376,7 +376,6 @@ object KgOracleGen {
     TurtleParser.parseFull(text) match {
       case Left(TurtleParser.NotFullyParsed(rest)) =>
         err("NotFullyParsed: " + rest.take(64))
-      case Left(e) => err(e.toString.take(128))
       case Right(ast) =>
         TripleProducer.produce(ast) match {
           case Left(e) => err("ProduceError: " + e.take(128))

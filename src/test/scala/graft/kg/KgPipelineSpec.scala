@@ -1,6 +1,9 @@
 package graft.kg
 
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -43,6 +46,20 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // blank node labels are globally unique per (url, block)
     val bnodes = ok.filter(_.subj_kind == "bnode").map(_.subj)
     bnodes.foreach(b => assert(b.startsWith("_:h")))
+  }
+
+  test("streaming triple extraction over a pages stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Model.Page]
+    val query = TripleExtraction.run(input.toDS())
+      .writeStream.format("memory").queryName("st")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(PagesSource.genPage(0), PagesSource.genPage(1))
+      query.processAllAvailable()
+      assert(spark.sql("SELECT * FROM st WHERE error IS NULL").count() > 0)
+    } finally query.stop()
   }
 
   test("round-trip audit: every well-formed block is byte-identical") {
@@ -283,6 +300,25 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(buckets == (0 until 7).map(b => s"bucket=$b").toSet)
   }
 
+  test("a failed bucket-sidecar rename fails the write") {
+    // the sidecar is written before any data is staged, so the write must
+    // stop there: a table without `_buckets.json` would lose its bucket
+    // count together with a lost manifest
+    spark.sparkContext.hadoopConfiguration.set("fs.norename.impl",
+      classOf[SidecarRenameFailsFileSystem].getName)
+    SparkSession.setActiveSession(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft-norename")
+    val triples = Canonicalize.canonicalizeTriples(
+      TripleExtraction.run(PagesSource.pages(spark, 20)),
+      spark.emptyDataFrame.selectExpr("'' as id", "'' as canonical").limit(0))
+    val e = intercept[java.io.IOException] {
+      Materialize.write(triples, s"norename://$dir/out", numBuckets = 3)
+    }
+    assert(e.getMessage.contains("_buckets.json"), e.getMessage)
+    assert(!java.nio.file.Files.exists(dir.resolve("out/_buckets.json")))
+    assert(!java.nio.file.Files.exists(dir.resolve("out/triples")))
+  }
+
   test("metadata-less dir with stale bucket data is rebuilt, not merged") {
     val out = java.nio.file.Files.createTempDirectory("graft-dirty").toString
     val triples = Canonicalize.canonicalizeTriples(
@@ -396,4 +432,14 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       out)
     assert(Materialize.readTriples(spark, out).count() == before)
   }
+}
+
+/** The local file system under the `norename:` scheme, except that renaming
+  * onto `_buckets.json` reports failure by returning false, as Hadoop file
+  * systems do. */
+class SidecarRenameFailsFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def getScheme: String = "norename"
+  override def rename(src: Path, dst: Path): Boolean =
+    dst.getName != "_buckets.json" && super.rename(src, dst)
 }

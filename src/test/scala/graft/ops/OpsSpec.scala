@@ -790,6 +790,37 @@ class OpsSpec extends AnyFunSuite {
     assert(df.count() > docs.count()) // multiple fingerprints per doc
   }
 
+  test("scan-heavy operators return the same rows on 1 and 7 input partitions") {
+    import spark.implicits._
+    // exact copies and last-token-dropped near copies, so every dedup
+    // operator has pairs or spans to return
+    val base = docs.select($"doc_id", $"text")
+    val corpus = base
+      .unionByName(base.filter($"doc_id" % 5 === 0)
+        .withColumn("doc_id", $"doc_id" + 100000L))
+      .unionByName(base.filter($"doc_id" % 7 === 0)
+        .withColumn("doc_id", $"doc_id" + 200000L)
+        .withColumn("text", regexp_replace($"text", "\\s+\\S+\\s*$", "")))
+    val memberships = spark.read.parquet(s"$sf/lineitem.parquet")
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      ("minhashDedup", corpus, DedupOps.minhashDedup(_)),
+      ("simhashDedup", corpus, DedupOps.simhashDedup(_)),
+      ("duplicatedSpans", corpus, DedupOps.duplicatedSpans(_)),
+      ("spanDupCoverage", corpus, DedupOps.spanDupCoverage(_)),
+      ("rareTrigramRate", corpus, TextOps.rareTrigramRate(_)),
+      ("winnowFingerprints", corpus, TextOps.winnowFingerprints(_)),
+      ("coOccurrenceEdges", memberships,
+        GraphOps.coOccurrenceEdges(_, "l_orderkey", "l_partkey")))
+    cases.foreach { case (name, input, op) =>
+      def rows(in: org.apache.spark.sql.DataFrame): Seq[String] =
+        op(in).collect().map(_.toString).toSeq.sorted
+      val one = rows(input.coalesce(1))
+      assert(one.nonEmpty, name)
+      assert(rows(input.repartition(7)) == one, name)
+    }
+  }
+
   test("multimodal feature extraction is deterministic and batched") {
     import spark.implicits._
     val media = MultimodalOps.mediaFromPages(graft.kg.PagesSource.pages(spark, 50))

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg.SparkTestSession
 
@@ -245,5 +247,31 @@ class PipelineOpsSpec extends AnyFunSuite {
     // starts: 0, 300, 600, 1100 -> bins 0, 0, 1, 2
     assert(out.map(_._3).toSeq == Seq(0L, 300L, 600L, 1100L))
     assert(out.map(_._4).toSeq == Seq(0L, 0L, 1L, 2L))
+  }
+
+  // ------------------------------------------------------------- streaming
+
+  test("batch curation operators run unchanged on streams (MixOps, TextOps)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String, String)]
+    // stratified sampling + PII scrub are narrow column plans, so the SAME
+    // operator code is streaming-legal with no modification
+    val curated = graft.ops.MixOps.stratifiedSample(
+      input.toDF().toDF("doc_id", "source", "text"),
+      org.apache.spark.sql.functions.col("source"),
+      org.apache.spark.sql.functions.col("doc_id"),
+      Map("keep" -> 1.0))
+      .withColumn("scrubbed", graft.ops.TextOps.piiScrub(
+        org.apache.spark.sql.functions.col("text")))
+    val query = curated.writeStream.format("memory").queryName("cur")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData((1L, "keep", "mail a@b.co"), (2L, "drop", "x"), (3L, "keep", "y"))
+      query.processAllAvailable()
+      val rows = spark.sql("SELECT doc_id, scrubbed FROM cur").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(rows == Set((1L, "mail <EMAIL>"), (3L, "y")))
+    } finally query.stop()
   }
 }
