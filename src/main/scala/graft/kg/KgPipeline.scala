@@ -1,6 +1,10 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.util.Try
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import Model._
 
@@ -37,6 +41,9 @@ object KgPipeline {
       // shuffle + spill files on tmpfs: the container overlay fs adds
       // high-variance IO latency that dwarfs compute at bench scale
       .config("spark.local.dir", localDir)
+      // file:// sets permissions in process instead of forking chmod per
+      // file and directory (no native Hadoop IO here)
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
     b.getOrCreate()
   }
 
@@ -46,7 +53,22 @@ object KgPipeline {
       errors: Long,
       linkedMentions: Long,
       components: Long,
-      lineage: DataFrame)
+      lineage: DataFrame,
+      buckets: Int,
+      measuredRows: Option[Long])
+
+  /** How long [[run]] waits for the observed triple count after the CC
+    * gate's collect returned: the count reaches its [[Observation]]
+    * through the asynchronous query listener, normally within
+    * milliseconds. */
+  private val ObservationWait = 10.seconds
+
+  /** The observed row count, or None when it did not arrive within
+    * [[ObservationWait]] or Spark completed the observation empty (the
+    * observed node was optimized out of the plan). */
+  private def observedRows(o: Observation): Option[Long] =
+    Try(Await.result(o.future, ObservationWait)).toOption
+      .filter(_.length > 0).map(_.getLong(0))
 
   /** Run the full pipeline over n synthetic pages, materializing to outDir. */
   def run(spark: SparkSession, n: Long, outDir: String): Result = {
@@ -70,12 +92,14 @@ object KgPipeline {
     // interleaves their stages, so the linking chain (including its eager
     // size-gated collect inside EntityLinking.link) overlaps the CC
     // iterations and the write instead of adding serial job latency
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val linkedCountF = Future(EntityLinking.run(triples).count())
 
-    val edges = Canonicalize.sameAsEdges(triples)
+    // the sameAs edges are filtered from counted triples: the CC gate's
+    // eager collect scans every triple on either gate branch, so the count
+    // (= the rows the write will stage) is complete when the gate returns
+    // and sizes a new table without a pass of its own
+    val observed = Observation()
+    val edges = Canonicalize.sameAsEdges(triples.observe(observed, count(lit(1))))
     // size-gated: driver-local union-find under the edge bound, else the
     // distributed pointer-doubling loop (which localCheckpoints per round)
     val labels = Canonicalize.connectedComponents(edges)
@@ -85,15 +109,21 @@ object KgPipeline {
     val componentsF =
       Future(labels.agg(countDistinct($"canonical")).head().getLong(0))
 
-    val lineage = Materialize.write(canonical, outDir)
+    val measuredRows = observedRows(observed)
+    val lineage = Materialize.write(canonical, outDir,
+      numBuckets = measuredRows.fold(0)(Materialize.autoBuckets(spark, _)))
 
     // totals come out of the (tiny, already-written) lineage table — one
     // small collect instead of two extra passes over the triple stream
     val totals = lineage.agg(sum($"triples"), sum($"errors")).head()
     def lng(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
 
+    // the table's bucket count as committed: a resumed table keeps its own
+    val buckets = Materialize.readManifestFull(outDir)._1.getOrElse(
+      throw new IllegalStateException(s"no manifest in $outDir after the write"))
+
     Result(n, lng(0), lng(1),
       Await.result(linkedCountF, Duration.Inf),
-      Await.result(componentsF, Duration.Inf), lineage)
+      Await.result(componentsF, Duration.Inf), lineage, buckets, measuredRows)
   }
 }

@@ -286,7 +286,7 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // crash window: manifest lost between delete and rename
     java.nio.file.Files.delete(java.nio.file.Paths.get(out, "_manifest.json"))
     // resume in auto mode (numBuckets=0): the sidecar must pin nb=7 —
-    // without it autoBuckets(parallelism) would orphan dirs >= newNb
+    // without it the parallelism-sized cap would orphan dirs >= newNb
     Materialize.write(triples, out)
     assert(Materialize.readManifestFull(out)._1.contains(7))
     assert(Materialize.readTriples(spark, out).count() == full)
@@ -420,7 +420,8 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.errors > 0)
     assert(r.linkedMentions > 0)
     assert(r.components > 0)
-    assert(Materialize.readManifest(out) == (0 until Materialize.NUM_BUCKETS).toSet)
+    assert(Materialize.readManifest(out) ==
+      (0 until Materialize.autoBuckets(spark, r.triples + r.errors)).toSet)
     val written = Materialize.readTriples(spark, out)
     assert(written.count() > 0)
     // resume: a second write is a no-op (all buckets committed)
@@ -431,6 +432,59 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark.emptyDataFrame.selectExpr("'' as id", "'' as canonical").limit(0)),
       out)
     assert(Materialize.readTriples(spark, out).count() == before)
+  }
+}
+
+class BucketRuleSpec extends AnyFunSuite {
+  import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+  import org.scalatest.time.SpanSugar._
+
+  private lazy val spark = SparkTestSession.spark
+  private def tmp(): String =
+    java.nio.file.Files.createTempDirectory("graft-buckets").toString
+
+  test("autoBuckets: one bucket per core up to 200k rows each, capped") {
+    val cores = spark.sparkContext.defaultParallelism
+    val cap = math.max(Materialize.NUM_BUCKETS, 8 * cores)
+    assert(Materialize.autoBuckets(spark, 0) == cores)
+    assert(Materialize.autoBuckets(spark, Long.MaxValue) == cap)
+    assert(Materialize.autoBuckets(spark, 200000L * (cores + 1) + 1) == cores + 2)
+    val rows = (0 to 40).map(i => 1L << i) ++ Seq(199999L, 200000L, 200001L, Long.MaxValue)
+    val nbs = rows.sorted.map(Materialize.autoBuckets(spark, _))
+    assert(nbs.zip(nbs.tail).forall { case (a, b) => a <= b }, nbs)
+    assert(intercept[IllegalArgumentException](Materialize.autoBuckets(spark, -1))
+      .getMessage.contains("got -1"))
+  }
+
+  test("a pipeline run sizes its new table from the measured rows") {
+    val out = tmp()
+    val r = KgPipeline.run(spark, 300, out)
+    // the observed count is the written row count, not a stand-in
+    assert(r.measuredRows.contains(r.triples + r.errors))
+    assert(Materialize.readTriples(spark, out).count() == r.triples + r.errors)
+    val nb = Materialize.autoBuckets(spark, r.triples + r.errors)
+    assert(r.buckets == nb)
+    assert(Materialize.readManifestFull(out) == (Some(nb), (0 until nb).toSet))
+  }
+
+  test("a resumed table keeps its manifest's bucket count") {
+    val out = tmp()
+    Materialize.writeManifest(out, 32, Set.empty)
+    val r = KgPipeline.run(spark, 300, out)
+    assert(r.measuredRows.map(Materialize.autoBuckets(spark, _)).exists(_ != 32))
+    assert(r.buckets == 32)
+    assert(Materialize.readManifestFull(out) == (Some(32), (0 until 32).toSet))
+  }
+
+  test("an empty run finishes and commits a complete, empty table") {
+    implicit val signaler: Signaler = ThreadSignaler
+    val out = tmp()
+    val r = TimeLimits.failAfter(120.seconds)(KgPipeline.run(spark, 0, out))
+    assert(r.triples == 0 && r.errors == 0)
+    assert(r.measuredRows.forall(_ == 0))
+    assert(r.buckets == Materialize.autoBuckets(spark,
+      r.measuredRows.getOrElse(Long.MaxValue)))
+    assert(Materialize.readManifestFull(out) == (Some(r.buckets), (0 until r.buckets).toSet))
   }
 }
 
