@@ -62,17 +62,24 @@ object Materialize {
     * Every bucket file costs a write task, a Hadoop-conf deserialization
     * and a lineage re-read whatever its size, so small tables want few
     * files. Seconds per pipeline run by bucket count, median of 3, on a
-    * shared 4-core host (7g heap, [[ForkFreeLocalFileSystem]]):
+    * shared 4-core host (7g heap, [[ForkFreeLocalFileSystem]]). The rule
+    * reads the triples plus the error rows (849,400 rows at 160k pages):
     *
     * {{{
-    *   rows       nb=1   nb=4   nb=8   nb=32
-    *   52,834     1.71   1.49   1.67   2.17
-    *   211,371    2.71   2.40   2.42   2.74
-    *   846,256    7.28   5.49   5.75   5.87
+    *   pages   triples    nb=1   nb=4   nb=8   nb=32   rule
+    *   10k     52,834     1.71   1.49   1.67   2.17    4 (floor)
+    *   40k     211,371    2.71   2.40   2.42   2.74    4 (floor)
+    *   160k    846,256    7.28   5.49   5.75   5.87    5
     * }}}
     *
-    * The rule picks 4 at all three sizes. At ~42M rows on 32 cores it picks
-    * 210, close to the 256 that the cap keeps. */
+    * Where the rule leaves the floor it was run against it, alternating
+    * runs in one JVM: at 849,400 rows nb=5 took a median 6.30 s against
+    * 6.42 s for nb=4 (5 runs each, nb=5 lower in 4 pairs); at 1,698,505
+    * rows (320k pages) the rule's nb=9 took 9.51 s against 9.88 s for
+    * nb=4 (10 runs each) and 11.35 s for nb=32 (3 runs). The gaps are
+    * within run-to-run noise: above the floor the rule is no worse than
+    * one bucket per core. At ~42M rows on 32 cores (round 7, where 256
+    * buckets beat 64) it picks 210; that point has not been re-run. */
   def autoBuckets(spark: SparkSession, rows: Long): Int = {
     require(rows >= 0, s"Materialize.autoBuckets: rows must be >= 0, got $rows")
     val wanted = rows / ROWS_PER_BUCKET + (if (rows % ROWS_PER_BUCKET == 0) 0 else 1)

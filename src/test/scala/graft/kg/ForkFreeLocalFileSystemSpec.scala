@@ -71,7 +71,11 @@ class ForkFreeLocalFileSystemSpec extends AnyFunSuite {
   }
 
   test("KgPipeline.session installs it for file://") {
-    assert(SparkTestSession.spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
-      classOf[ForkFreeLocalFileSystem].getName)
+    val conf = SparkTestSession.spark.sparkContext.hadoopConfiguration
+    assert(conf.get("fs.file.impl") == classOf[ForkFreeLocalFileSystem].getName)
+    // what the session's conf resolves file:// to, past the JVM-wide cache
+    val fs = FileSystem.newInstance(java.net.URI.create("file:///"), conf)
+    try assert(fs.isInstanceOf[ForkFreeLocalFileSystem], fs.getClass)
+    finally fs.close()
   }
 }

@@ -485,6 +485,12 @@ class BucketRuleSpec extends AnyFunSuite {
     assert(r.buckets == Materialize.autoBuckets(spark,
       r.measuredRows.getOrElse(Long.MaxValue)))
     assert(Materialize.readManifestFull(out) == (Some(r.buckets), (0 until r.buckets).toSet))
+    // the observation completes (empty) rather than timing out: a warm
+    // empty run never waits out ObservationWait
+    val t0 = System.nanoTime()
+    KgPipeline.run(spark, 0, tmp())
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(s < KgPipeline.ObservationWait.toSeconds, s)
   }
 }
 
