@@ -283,16 +283,15 @@ object ClusterScale {
         val base = java.nio.file.Paths.get("/dev/shm/graft-bench")
         java.nio.file.Files.createDirectories(base)
         val out = java.nio.file.Files.createTempDirectory(base, "csprof").toString
-        // every row, error rows included: the count the write stages and
-        // the pipeline sizes a new table from
-        val rows = timed("parse(1 pass)")(triples.count())
-        val linked = graft.kg.EntityLinking.run(triples)
-        timed("linking+count")(linked.count())
-        val edges = graft.kg.Canonicalize.sameAsEdges(triples)
-        val labels = timed("cc")(graft.kg.Canonicalize.connectedComponents(edges))
+        // a round's two passes in order: the probe (linking's surface
+        // counts, the sameAs edges and the triple count), then the write;
+        // the driver-side linking count overlaps the write in a round
+        val p = timed("probe")(graft.kg.KgPipeline.probe(triples))
+        val labels = graft.kg.KgPipeline.componentLabels(triples, p)
         val canonical = graft.kg.Canonicalize.canonicalizeTriples(triples, labels)
         timed("write+lineage")(graft.kg.Materialize.write(canonical, out,
-          numBuckets = graft.kg.Materialize.autoBuckets(spark, rows)))
+          numBuckets = p.rows.fold(0)(graft.kg.Materialize.autoBuckets(spark, _))))
+        timed("linked count")(graft.kg.KgPipeline.linkedCount(triples, p))
         timed("components")(labels.agg(countDistinct($"canonical")).head())
         Bench.rmTree(new java.io.File(out))
       }

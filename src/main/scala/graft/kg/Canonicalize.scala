@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.{GraphOps, LocalGate}
@@ -31,11 +31,14 @@ object Canonicalize {
   def sameAsEdges(triples: Dataset[TripleRow]): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    triples.toDF()
-      .filter($"error".isNull && $"pred" === PagesSource.SAME_AS &&
-        $"obj_kind" === "iri" && $"subj_kind" === "iri")
+    triples.toDF().filter(isSameAsEdge)
       .select($"subj".as("src"), $"obj_value".as("dst"))
   }
+
+  /** The row predicate of [[sameAsEdges]] over the triple columns: a
+    * well-formed IRI → IRI `owl:sameAs` triple. */
+  val isSameAsEdge: Column = col("error").isNull && col("pred") === PagesSource.SAME_AS &&
+    col("obj_kind") === "iri" && col("subj_kind") === "iri"
 
   /** Size gate for the driver-local CC path, in DISTINCT edges: below it
     * the whole component computation is cheaper on the driver (one dedup
@@ -51,27 +54,33 @@ object Canonicalize {
     * One [[graft.ops.LocalGate.collectAtMost]] over the DISTINCT edges
     * picks the path (at 4M synthetic pages there are ~600k raw but only
     * ~6k distinct edges):
-    *  - ≤ LOCAL_CC_MAX_EDGES: the collected edges' IRIs are sorted on the
-    *    driver and their ranks go through GraphOps' union-find. The result
-    *    is a local relation, so downstream joins against it broadcast
-    *    without stats guessing;
+    *  - ≤ LOCAL_CC_MAX_EDGES: [[localCC]] over the collected edges. The
+    *    result is a local relation, so downstream joins against it
+    *    broadcast without stats guessing;
     *  - otherwise: [[distributedCC]] recomputes the distinct edges. */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val distinct = edges.select($"src", $"dst").distinct()
     LocalGate.collectAtMost(distinct.as[(String, String)], LOCAL_CC_MAX_EDGES) match {
-      case Some(es) =>
-        val iris = es.flatMap(e => Array(e._1, e._2)).distinct
-          .map(UTF8String.fromString).sorted.map(_.toString)
-        val rank = iris.zipWithIndex.toMap
-        val labels = GraphOps.localComponents(
-          es.map(e => rank(e._1).toLong), es.map(e => rank(e._2).toLong))
-        spark.createDataset(labels.toIndexedSeq.map { case (n, c) =>
-            (iris(n.toInt), iris(c.toInt)) })
-          .toDF("id", "canonical")
+      case Some(es) => localCC(spark, es)
       case None => distributedCC(distinct)
     }
+  }
+
+  /** The under-gate path over collected `(src, dst)` edges: the edges'
+    * IRIs are sorted on the driver and their ranks go through GraphOps'
+    * union-find. Output as [[connectedComponents]]'s, as a local relation. */
+  private[kg] def localCC(spark: SparkSession, es: Array[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val iris = es.flatMap(e => Array(e._1, e._2)).distinct
+      .map(UTF8String.fromString).sorted.map(_.toString)
+    val rank = iris.zipWithIndex.toMap
+    val labels = GraphOps.localComponents(
+      es.map(e => rank(e._1).toLong), es.map(e => rank(e._2).toLong))
+    spark.createDataset(labels.toIndexedSeq.map { case (n, c) =>
+        (iris(n.toInt), iris(c.toInt)) })
+      .toDF("id", "canonical")
   }
 
   /** The above-gate path (directly callable in tests): rank every IRI in

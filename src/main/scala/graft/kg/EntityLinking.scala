@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.{DedupOps, LocalGate}
@@ -73,10 +73,14 @@ object EntityLinking {
     * inside [[link]] — at 10^12 mentions a per-occurrence normalize
     * lambda was the occurrence stream's only non-codegen operator. */
   def mentions(triples: Dataset[TripleRow]): DataFrame =
-    triples.toDF()
-      .filter(col("error").isNull && col("pred") === PagesSource.MENTIONS_PRED &&
-        col("obj_kind") === "literal")
+    triples.toDF().filter(isMention)
       .select(col("url"), col("obj_value").as("surface"))
+
+  /** The row predicate of [[mentions]] over the triple columns: a
+    * well-formed triple whose object is a literal of the mention
+    * predicate. */
+  val isMention: Column = col("error").isNull &&
+    col("pred") === PagesSource.MENTIONS_PRED && col("obj_kind") === "literal"
 
   /** Link mentions `(url, surface)` against the dictionary. Returns one row
     * per mention occurrence that found a match (exact preferred over lsh).
@@ -115,6 +119,20 @@ object EntityLinking {
       .join(surfaceMap, Seq("surface"))
       .select($"url", $"surface", $"entity_iri", $"method")
   }
+
+  /** `link(mentions, dict).count()` from the mentions' distinct surfaces
+    * with their occurrence counts, without a pass over the occurrences:
+    * Σ over [[localSurfaceMap]]'s rows of that row's surface count, so an
+    * exact match on a duplicated dictionary entry counts once per entry,
+    * as the join emits it. None above [[link]]'s gate: more than
+    * `maxLocal` surfaces or dictionary rows. */
+  private[kg] def localLinkedCount(surfaceCounts: Array[(String, Long)],
+      dict: Dataset[DictEntry], maxLocal: Int = MAX_LOCAL_NORM_MATCHES): Option[Long] =
+    if (surfaceCounts.length > maxLocal) None
+    else LocalGate.collectAtMost(dict, maxLocal).map { dictArr =>
+      val counts = surfaceCounts.toMap
+      localSurfaceMap(surfaceCounts.map(_._1), dictArr).iterator.map(r => counts(r._1)).sum
+    }
 
   /** Driver-local (surface → entity, method) map — the under-gate path.
     * The whole linking decision is a pure function of (distinct surfaces,

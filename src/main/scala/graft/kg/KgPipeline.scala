@@ -6,6 +6,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.LocalGate
 import Model._
 
 /** End-to-end KG construction (north_star): synthesize/scan pages → extract
@@ -22,6 +23,14 @@ import Model._
   * driver-local union-find and its distributed pointer-doubling loop on
   * a distinct-edge gate, and everything else lets AQE pick the join
   * strategy from observed sizes.
+  *
+  * A run parses its pages twice. One [[probe]] pass collects, in a single
+  * small aggregate, what the driver needs for linking (distinct mention
+  * surfaces with counts), for canonicalization (distinct sameAs edges) and
+  * for sizing the new table (the triple count); the write is the second
+  * pass. A part over its gate falls back to the stage's own entry point
+  * (`EntityLinking.run`, `Canonicalize.connectedComponents`), which
+  * re-probes with its own gate.
   */
 object KgPipeline {
 
@@ -57,64 +66,111 @@ object KgPipeline {
       buckets: Int,
       measuredRows: Option[Long])
 
-  /** How long [[run]] waits for the observed triple count after the CC
-    * gate's collect returned: the count reaches its [[Observation]]
-    * through the asynchronous query listener, normally within
-    * milliseconds. */
+  /** How long [[probe]] waits for the observed triple count after its
+    * collect returned: the count reaches its [[Observation]] through the
+    * asynchronous query listener, normally within milliseconds. */
   private[kg] val ObservationWait = 10.seconds
 
   /** The observed row count, or None when it did not arrive within
-    * [[ObservationWait]] or Spark completed the observation empty. Spark
-    * does the latter when the observed node was optimized out of the
-    * executed plan, as it is for 0 pages: such a run takes the cap
-    * without waiting (about 1.1 s for a warm `run(spark, 0, out)` on
-    * 4 cores). */
+    * [[ObservationWait]]. Spark completes an observation empty when the
+    * observed node was optimized out of the executed plan, which it does
+    * only for a plan with no rows (0 pages): that is 0 rows. */
   private def observedRows(o: Observation): Option[Long] =
     Try(Await.result(o.future, ObservationWait)).toOption
-      .filter(_.length > 0).map(_.getLong(0))
+      .map(r => if (r.length > 0) r.getLong(0) else 0L)
+
+  /** What one pass over the triples tells the driver: the distinct mention
+    * surfaces with their occurrence counts (None above the linking bound),
+    * the distinct `owl:sameAs` edges (None above the CC bound), and the
+    * triple count, error rows included (None only on a timeout). */
+  private[graft] final case class Probe(
+      surfaceCounts: Option[Array[(String, Long)]],
+      edges: Option[Array[(String, String)]],
+      rows: Option[Long])
+
+  /** One aggregate over the rows that are a mention
+    * ([[EntityLinking.isMention]]) or a sameAs edge
+    * ([[Canonicalize.isSameAsEdge]]), projected to `(mention, a, b)` —
+    * `(true, surface, null)` or `(false, src, dst)` — and grouped with a
+    * count, fetched by one [[graft.ops.LocalGate.collectAtMost]] bounded by
+    * the sum of the two parts' bounds; each part is then held to its own.
+    * The triple count is observed below the filter: the aggregate's
+    * shuffle-map stage scans every triple whether or not the collect
+    * passes its gate, so the count is complete when the collect returns. */
+  private[graft] def probe(triples: Dataset[TripleRow],
+      linkMax: Int = EntityLinking.MAX_LOCAL_NORM_MATCHES,
+      ccMax: Int = Canonicalize.LOCAL_CC_MAX_EDGES): Probe = {
+    val spark = triples.sparkSession
+    import spark.implicits._
+    val observed = Observation()
+    val m = EntityLinking.isMention
+    val keys = triples.observe(observed, count(lit(1))).toDF()
+      .filter(m || Canonicalize.isSameAsEdge)
+      .select(m.as("mention"), when(m, $"obj_value").otherwise($"subj").as("a"),
+        when(!m, $"obj_value").as("b"))
+      .groupBy($"mention", $"a", $"b").count()
+      .as[(Boolean, String, String, Long)]
+    val got = LocalGate.collectAtMost(keys, linkMax + ccMax)
+    Probe(
+      got.map(_.collect { case (true, s, _, n) => (s, n) }).filter(_.length <= linkMax),
+      got.map(_.collect { case (false, src, dst, _) => (src, dst) }).filter(_.length <= ccMax),
+      observedRows(observed))
+  }
+
+  /** `EntityLinking.run(triples).count()`: on the driver from the probed
+    * surface counts under the gate, else that call itself, which
+    * re-probes with its own gate. */
+  private[graft] def linkedCount(triples: Dataset[TripleRow], p: Probe,
+      linkMax: Int = EntityLinking.MAX_LOCAL_NORM_MATCHES): Long =
+    p.surfaceCounts
+      .flatMap(EntityLinking.localLinkedCount(_,
+        PagesSource.dictionary(triples.sparkSession), linkMax))
+      .getOrElse(EntityLinking.run(triples).count())
+
+  /** `Canonicalize.connectedComponents(Canonicalize.sameAsEdges(triples))`:
+    * its local branch over the probed edges under the gate, else that call
+    * itself, which re-probes with its own gate. */
+  private[graft] def componentLabels(triples: Dataset[TripleRow], p: Probe): DataFrame =
+    p.edges.fold(Canonicalize.connectedComponents(Canonicalize.sameAsEdges(triples)))(
+      Canonicalize.localCC(triples.sparkSession, _))
 
   /** Run the full pipeline over n synthetic pages, materializing to outDir. */
-  def run(spark: SparkSession, n: Long, outDir: String): Result = {
+  def run(spark: SparkSession, n: Long, outDir: String): Result =
+    run(spark, n, outDir, EntityLinking.MAX_LOCAL_NORM_MATCHES,
+      Canonicalize.LOCAL_CC_MAX_EDGES)
+
+  /** [[run]] with the probe's two bounds given, so tests can send either
+    * part, or both, to its fallback. */
+  private[kg] def run(spark: SparkSession, n: Long, outDir: String,
+      linkMax: Int, ccMax: Int): Result = {
     import spark.implicits._
 
     val pages: Dataset[Page] = PagesSource.pages(spark, n)
 
-    // Downstream consumers re-run the parse per pass, deliberately:
-    //  - .cache() is slower at high parallelism (MemoryStore writes
-    //    serialize under 32 concurrent tasks — measured slower than
-    //    local[8]);
-    //  - parquet staging (write once, read per consumer) was also measured
-    //    slower at this corpus shape: one parse pass costs ~1.7s at
-    //    local[32] vs a 10.5M-row staging write + four reads. For corpora
-    //    where parse dominates IO (heavier documents), stage to parquet
-    //    here instead — the recovery-boundary structure is in
-    //    Materialize.write already.
+    // The triples are parsed twice per run, by the probe and by the write.
+    // The probe's small aggregate is all that linking, canonicalization and
+    // the bucket count need, so nothing is cached or staged. Measured on a
+    // shared 4-core host (7g heap, 10,000-page rounds): persisting the
+    // triples for the run lost 3 of 3 alternating pairs against not
+    // persisting (round 1.83/2.21, 1.37/1.53, 1.74/1.86 s; 6.1/7.7,
+    // 5.1/5.4, 5.8/6.3 CPU-s): the columnar cache costs more to build than
+    // the passes it replaces.
     val triples: Dataset[TripleRow] = TripleExtraction.run(pages)
 
-    // independent actions run as concurrent Spark jobs: the scheduler
-    // interleaves their stages, so the linking chain (including its eager
-    // size-gated collect inside EntityLinking.link) overlaps the CC
-    // iterations and the write instead of adding serial job latency
-    val linkedCountF = Future(EntityLinking.run(triples).count())
+    val p = probe(triples, linkMax, ccMax)
 
-    // the sameAs edges are filtered from counted triples: the CC gate's
-    // eager collect scans every triple on either gate branch, so the count
-    // (= the rows the write will stage) is complete when the gate returns
-    // and sizes a new table without a pass of its own
-    val observed = Observation()
-    val edges = Canonicalize.sameAsEdges(triples.observe(observed, count(lit(1))))
-    // size-gated: driver-local union-find under the edge bound, else the
-    // distributed pointer-doubling loop (which localCheckpoints per round)
-    val labels = Canonicalize.connectedComponents(edges)
+    // off the main thread: the driver-local linking (or, above its gate,
+    // the linking jobs) overlaps the write
+    val linkedCountF = Future(linkedCount(triples, p, linkMax))
 
+    val labels = componentLabels(triples, p)
     val canonical = Canonicalize.canonicalizeTriples(triples, labels)
 
     val componentsF =
       Future(labels.agg(countDistinct($"canonical")).head().getLong(0))
 
-    val measuredRows = observedRows(observed)
     val lineage = Materialize.write(canonical, outDir,
-      numBuckets = measuredRows.fold(0)(Materialize.autoBuckets(spark, _)))
+      numBuckets = p.rows.fold(0)(Materialize.autoBuckets(spark, _)))
 
     // totals come out of the (tiny, already-written) lineage table — one
     // small collect instead of two extra passes over the triple stream
@@ -127,6 +183,6 @@ object KgPipeline {
 
     Result(n, lng(0), lng(1),
       Await.result(linkedCountF, Duration.Inf),
-      Await.result(componentsF, Duration.Inf), lineage, buckets, measuredRows)
+      Await.result(componentsF, Duration.Inf), lineage, buckets, p.rows)
   }
 }
