@@ -225,9 +225,10 @@ object GraphOps {
     val uLower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     // oriented edge (s → d) with rank(s) < rank(d); dd = degree of d so the
-    // wedge join can rank out-neighbors without re-joining the degree table
-    // consumed three times below; the GraphX idiom (cache the graph,
-    // iterate, let LRU evict) on the above-gate path only
+    // wedge join can rank out-neighbors without re-joining the degree table.
+    // Consumed three times below, so it is pinned (unpinned, the sf0.1
+    // co-purchase graph takes about twice as long); the result is
+    // materialized as a local checkpoint before the pin is released
     val oriented = withDeg.select(
       when(uLower, col("u")).otherwise(col("v")).as("s"),
       when(uLower, col("v")).otherwise(col("u")).as("d"),
@@ -241,9 +242,11 @@ object GraphOps {
       .select(col("s"), col("d1"), col("d2"))
     val closing = oriented.select(col("s").as("d1"), col("d").as("d2"))
     val triangles = wedges.join(closing, Seq("d1", "d2"))
-    triangles
+    try triangles
       .select(explode(array(col("s"), col("d1"), col("d2"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("n_triangles"))
+      .localCheckpoint()
+    finally oriented.unpersist()
   }
 
   /** Connected components of an undirected edge list: (n, component) with

@@ -1,5 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -9,10 +13,10 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import java.nio.charset.StandardCharsets
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
 import graft.turtle.TripleRows
 
@@ -38,25 +42,13 @@ class TurtleDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     TurtleDataSource.SCHEMA
 
-  // writes carry the query's own schema (the sink resolves its required
-  // columns by name and ignores extras like url/block/error)
-  override def supportsExternalMetadata(): Boolean = true
-
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
-    val opts = properties.asScala
+    val opts = new CaseInsensitiveStringMap(properties)
     new TurtleTable(
-      opts.getOrElse("path",
+      Option(opts.get("path")).getOrElse(
         throw new IllegalArgumentException("turtle source requires a path")),
-      opts.get("maxbytes").orElse(opts.get("maxBytes")).map(_.toLong)
-        .getOrElse(TurtleDataSource.DEFAULT_MAX_BYTES),
-      opts.get("minagems").orElse(opts.get("minAgeMs")).map(_.toLong)
-        .getOrElse(0L),
-      opts.get("compacttail").orElse(opts.get("compactTail")).map(_.toInt)
-        .getOrElse(TurtleMicroBatchStream.DEFAULT_COMPACT_TAIL),
-      opts.get("fullrescanevery").orElse(opts.get("fullRescanEvery")).map(_.toInt)
-        .getOrElse(TurtleMicroBatchStream.DEFAULT_FULL_RESCAN_EVERY),
-      schema)
+      opts.getLong("maxBytes", TurtleDataSource.DEFAULT_MAX_BYTES))
   }
 }
 
@@ -72,72 +64,34 @@ object TurtleDataSource {
     StructField("obj_lang", StringType),
     StructField("error", StringType)))
 
-  /** List .ttl files via the Hadoop FileSystem API so the source works on
-    * any Spark-supported filesystem (local, HDFS, S3A, ...), not just the
-    * driver's local disk. */
-  def listTtlFiles(root: String): Seq[String] = listTtlFiles(root, 0L)
-
-  /** `minAgeMs > 0` skips files modified within the last `minAgeMs` — the
-    * grace window for producers that copy into the landing dir
-    * non-atomically (a file picked up mid-copy would parse truncated AND
-    * be permanently marked seen by the streaming offset). Producers that
-    * write-then-rename atomically (the usual landing protocol, and what
-    * Spark's own file sources require) can leave this 0.
-    *
-    * Paths with a `_`- or `.`-prefixed segment under the root are skipped
-    * (Spark's hidden-file convention) — in particular the sink's
-    * `_temporary/<jobTag>/` staging area, so a concurrent write's staged
-    * files are never read (and never half-read mid-job). */
-  def listTtlFiles(root: String, minAgeMs: Long): Seq[String] =
-    listTtlFilesSince(root, minAgeMs, Long.MinValue)._1.sorted
-
-  /** Incremental listing for the streaming source's mtime watermark
-    * (round-6 VERDICT #4): accepts visible `.ttl` files with modification
-    * time in `[mtimeFloor, now - minAgeMs]` and returns (accepted paths,
-    * unsorted; max accepted mtime; count of entries that paid per-entry
-    * processing). Directory ENUMERATION is inherently O(entries) on a flat
-    * landing dir — FileStreamSource parity — but entries below the floor
-    * are skipped with a single timestamp compare before any name
-    * qualification, string retention, or set work, so the per-trigger
-    * processing cost is O(new arrivals + floor ties), not O(lifetime
-    * files). `mtimeFloor = Long.MinValue` lists everything (full rescan). */
-  def listTtlFilesSince(root: String, minAgeMs: Long, mtimeFloor: Long)
-      : (Seq[String], Long, Int) = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(root)
+  /** Sorted `.ttl` files under `root` (or `root` itself when it is a file),
+    * listed through the Hadoop FileSystem API so the source works on any
+    * Spark-supported file system (local, HDFS, S3A, ...), not just the
+    * driver's local disk. Paths with a `_`- or `.`-prefixed segment below
+    * the root are skipped: Spark's hidden-file convention for metadata and
+    * staging directories. */
+  def listTtlFiles(root: String, conf: Configuration): Seq[String] = {
+    val path = new Path(root)
     val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) return (Seq.empty, Long.MinValue, 0)
-    val cutoff =
-      if (minAgeMs <= 0) Long.MaxValue else System.currentTimeMillis() - minAgeMs
-    val status = fs.getFileStatus(path)
-    if (status.isFile) (Seq(path.toString), status.getModificationTime, 1)
+    if (!fs.exists(path)) Seq.empty
+    else if (fs.getFileStatus(path).isFile) Seq(path.toString)
     else {
       val qualRoot = fs.makeQualified(path)
       val out = Vector.newBuilder[String]
-      var maxMtime = Long.MinValue
-      var processed = 0
       val it = fs.listFiles(path, true)
       while (it.hasNext) {
         val f = it.next()
-        val m = f.getModificationTime
-        if (m >= mtimeFloor) { // floor compare FIRST: old entries cost 1 branch
-          processed += 1
-          if (f.isFile && f.getPath.getName.endsWith(".ttl") &&
-              m <= cutoff && !hiddenUnder(f.getPath, qualRoot)) {
-            out += f.getPath.toString
-            if (m > maxMtime) maxMtime = m
-          }
-        }
+        if (f.isFile && f.getPath.getName.endsWith(".ttl") &&
+            !hiddenUnder(f.getPath, qualRoot))
+          out += f.getPath.toString
       }
-      (out.result(), maxMtime, processed)
+      out.result().sorted
     }
   }
 
   /** True if any path segment strictly below `root` (the file name included)
-    * starts with `_` or `.` — Spark's convention for metadata/staging. */
-  private[sources] def hiddenUnder(p: org.apache.hadoop.fs.Path,
-      root: org.apache.hadoop.fs.Path): Boolean = {
+    * starts with `_` or `.`. */
+  private def hiddenUnder(p: Path, root: Path): Boolean = {
     var cur = p
     while (cur != null && cur != root && cur.toString.length > root.toString.length) {
       val n = cur.getName
@@ -183,68 +137,42 @@ object TurtleDataSource {
   }
 }
 
-private class TurtleTable(path: String, maxBytes: Long, minAgeMs: Long,
-    compactTail: Int, fullRescanEvery: Int, tableSchema: StructType)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+private class TurtleTable(path: String, maxBytes: Long)
+    extends Table with SupportsRead {
   override def name(): String = s"turtle($path)"
-  override def schema(): StructType = tableSchema
+  override def schema(): StructType = TurtleDataSource.SCHEMA
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // supportsExternalMetadata=true exists for the WRITE path (the sink
-    // resolves its columns from the query schema); the reader always emits
-    // the fixed triple schema, so a user-supplied read schema must refuse
-    // loudly here rather than misbind columns at runtime
-    require(tableSchema == TurtleDataSource.SCHEMA,
-      "the turtle READER does not support user-specified schemas; " +
-        "read the fixed triple schema and select/cast from it")
-    new TurtleScanBuilder(path, maxBytes, minAgeMs, compactTail, fullRescanEvery)
-  }
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new TurtleWriteBuilder(path, info)
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    () => new TurtleScan(path, maxBytes)
 }
 
-private class TurtleScanBuilder(path: String, maxBytes: Long,
-    minAgeMs: Long = 0L,
-    compactTail: Int = TurtleMicroBatchStream.DEFAULT_COMPACT_TAIL,
-    fullRescanEvery: Int = TurtleMicroBatchStream.DEFAULT_FULL_RESCAN_EVERY)
-    extends ScanBuilder {
-  override def build(): Scan =
-    new TurtleScan(path, maxBytes, minAgeMs, compactTail, fullRescanEvery)
-}
-
-private class TurtleScan(path: String, maxBytes: Long, minAgeMs: Long = 0L,
-    compactTail: Int = TurtleMicroBatchStream.DEFAULT_COMPACT_TAIL,
-    fullRescanEvery: Int = TurtleMicroBatchStream.DEFAULT_FULL_RESCAN_EVERY)
-    extends Scan with Batch {
+/** Driver side of a read: lists the files and hands the executors the
+  * session's Hadoop conf (`spark.hadoop.*` settings included), the same
+  * conf the listing used. */
+private class TurtleScan(path: String, maxBytes: Long) extends Scan with Batch {
+  private val spark = SparkSession.active
+  private val hadoopConf = spark.sessionState.newHadoopConf()
   override def readSchema(): StructType = TurtleDataSource.SCHEMA
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    // offsets resolve against the compacting seen-files registry kept
-    // under <checkpointLocation>/graft-registry (see TurtleMicroBatchStream)
-    new TurtleMicroBatchStream(path, maxBytes, minAgeMs, checkpointLocation,
-      compactTail, fullRescanEvery)
   override def planInputPartitions(): Array[InputPartition] =
-    TurtleDataSource.listTtlFiles(path)
+    TurtleDataSource.listTtlFiles(path, hadoopConf)
       .map(f => TurtleFilePartition(f): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new TurtleReaderFactory(maxBytes)
+    new TurtleReaderFactory(maxBytes,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)))
 }
 
 private case class TurtleFilePartition(file: String) extends InputPartition
 
-private class TurtleReaderFactory(maxBytes: Long) extends PartitionReaderFactory {
+private class TurtleReaderFactory(maxBytes: Long,
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new TurtleFileReader(partition.asInstanceOf[TurtleFilePartition].file, maxBytes)
+    new TurtleFileReader(partition.asInstanceOf[TurtleFilePartition].file,
+      maxBytes, conf.value.value)
 }
 
-private class TurtleFileReader(file: String, maxBytes: Long)
+private class TurtleFileReader(file: String, maxBytes: Long, conf: Configuration)
     extends PartitionReader[InternalRow] {
   private def u(s: String): UTF8String =
     if (s == null) null else UTF8String.fromString(s)
@@ -253,10 +181,8 @@ private class TurtleFileReader(file: String, maxBytes: Long)
     new GenericInternalRow(r.map(u(_): Any))
 
   private val rows: Iterator[InternalRow] = {
-    // executor-side read through the Hadoop FS API (new Configuration picks
-    // up the cluster's core-site/hdfs-site from the classpath)
-    val path = new org.apache.hadoop.fs.Path(file)
-    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val path = new Path(file)
+    val fs = path.getFileSystem(conf)
     val size = fs.getFileStatus(path).getLen
     if (size > maxBytes) {
       // size gate BEFORE the read: an unsplittable oversized document must
@@ -265,16 +191,10 @@ private class TurtleFileReader(file: String, maxBytes: Long)
       Iterator.single(toInternal(Array(file, null, null, null, null, null,
         null, null, s"FileTooLarge: $size bytes > maxBytes=$maxBytes")))
     } else {
-      val text = {
-        val in = fs.open(path)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](64 * 1024)
-          var nRead = in.read(tmp)
-          while (nRead >= 0) { buf.write(tmp, 0, nRead); nRead = in.read(tmp) }
-          new String(buf.toByteArray, StandardCharsets.UTF_8)
-        } finally in.close()
-      }
+      val in = fs.open(path)
+      val text =
+        try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
       TurtleDataSource.rowsForDocument(file, text).map(toInternal)
     }
   }

@@ -1,8 +1,12 @@
 package graft.ops
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg.SparkTestSession
+import scala.jdk.CollectionConverters._
 
 class GraphOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -178,15 +182,18 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("gated operators leave no pinned RDDs behind (round-7 VERDICT #4)") {
     // a long-lived session issuing many graph queries must not accumulate
-    // pinned blocks
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // pinned blocks; a returned local checkpoint is the result itself, not
+    // a pin. Compared by id, so RDDs cleaned up meanwhile cannot hide a new pin
+    def pinned = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    val before = pinned
     GraphOps.triangleCounts(edges).collect()
+    GraphOps.triangleCountsJoined(edges).collect()
     GraphOps.connectedComponents(edges).collect()
     GraphOps.pageRankCredits(edges, iters = 2).collect()
     GraphOps.degreeCensus(edges).collect()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before,
-      s"net pinned-RDD increase after gated graph ops: $before -> $after")
+    val added = pinned -- before
+    assert(added.isEmpty, s"gated graph ops left pinned RDDs: $added")
   }
 
   test("a failing edge relation leaves no pinned RDDs in any gated operator") {
@@ -233,9 +240,23 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("triangle plan: keyed equi-joins only, no cartesian product") {
-    // the above-gate join pipeline is the shape that must never degenerate
-    val plan = GraphOps.triangleCountsJoined(edges)
-      .queryExecution.executedPlan.toString
+    // the above-gate join pipeline is the shape that must never degenerate.
+    // It runs eagerly (a local checkpoint), so read the plan it executed
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      GraphOps.triangleCountsJoined(edges)
+      TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val plan = plans.asScala.mkString("\n")
+    assert(plan.contains("SortMergeJoin") || plan.contains("BroadcastHashJoin"),
+      s"no join plan observed:\n${plan.take(2000)}")
     assert(!plan.contains("CartesianProduct"),
       s"triangle join degenerated to a cartesian:\n${plan.take(2000)}")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
