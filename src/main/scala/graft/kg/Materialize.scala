@@ -27,8 +27,8 @@ import java.nio.charset.StandardCharsets
   *    per bucket, no small-file explosion.
   *  - COMMIT GRANULARITY: data is written once to a staging dir (one Spark
   *    job — no upstream recompute per group), then bucket dirs are renamed
-  *    into the final table in `commitGroups` groups with a manifest update
-  *    after each group. A crash mid-commit preserves the groups already
+  *    into the final table in `COMMIT_GROUPS` (4) groups with a manifest
+  *    update after each group. A crash mid-commit preserves the groups already
   *    renamed+committed (partition-level progress), and a crash during the
   *    staging write loses only staging. Renames are metadata ops on
   *    HDFS-like filesystems.
@@ -47,6 +47,10 @@ object Materialize {
 
   /** Rows per bucket file that [[autoBuckets]] aims at. */
   private val ROWS_PER_BUCKET = 200000L
+
+  /** Manifest commit points across a write's pending buckets: the resume
+    * granularity after a crash mid-commit. */
+  private val COMMIT_GROUPS = 4
 
   /** The cap, max(NUM_BUCKETS, 8 buckets per core): the subject-hash
     * distribution is skewed (hub subjects repeat across many documents;
@@ -131,11 +135,8 @@ object Materialize {
     * @param numBuckets the count for a new table, e.g. from
     *                   [[autoBuckets]]; 0 = auto (max(NUM_BUCKETS,
     *                   8×defaultParallelism), see [[capBuckets]]). A
-    *                   resumed table keeps its own count either way.
-    * @param commitGroups number of manifest commit points across the
-    *                   pending buckets (resume granularity) */
-  def write(triples: DataFrame, outDir: String, numBuckets: Int = 0,
-      commitGroups: Int = 4): DataFrame = {
+    *                   resumed table keeps its own count either way. */
+  def write(triples: DataFrame, outDir: String, numBuckets: Int = 0): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
 
@@ -218,7 +219,7 @@ object Materialize {
       val finalTriples = new Path(s"$outDir/triples")
       hfs.mkdirs(finalTriples)
       val groupSize = math.max(1, math.ceil(
-        pendingBuckets.size.toDouble / math.max(1, commitGroups)).toInt)
+        pendingBuckets.size.toDouble / COMMIT_GROUPS).toInt)
       var committed = done
       pendingBuckets.grouped(groupSize).foreach { group =>
         group.foreach { b =>

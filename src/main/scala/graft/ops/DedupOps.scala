@@ -11,8 +11,8 @@ import graft.kg.PagesSource.{fnv64, mix64}
   *  - exact: hash-groupBy on content (partial agg map-side; one shuffle)
   *  - MinHash+LSH: shingle → minhash → band → self-join on band key —
   *    candidate pairs only, never O(n²)
-  *  - SimHash: 64-bit signature, banded into 4×16-bit keys → Hamming-near
-  *    pairs collide on ≥1 band (pigeonhole, ≤3 bit flips)
+  *  - SimHash: 64-bit signature, keyed on 16 sub-band keys → pairs within
+  *    3 bit flips share ≥1 key (pigeonhole, [[DedupOps.simhashKeys]])
   *  - n-gram Jaccard: exact verification on LSH candidates
   */
 object DedupOps {
@@ -88,47 +88,52 @@ object DedupOps {
   val BAND_ROWS = 4
   val NUM_BANDS = NUM_HASHES / BAND_ROWS
 
-  /** Per-(band,key) bucket membership cap for the LSH self-joins. Without a
-    * cap, a corpus with k identical boilerplate documents puts all k in one
-    * bucket → O(k²) candidate pairs (the classic Common-Crawl blowup). With
-    * the cap, a bucket contributes at most cap·(cap-1)/2 pairs; members of a
-    * hot bucket beyond the cap still pair with the kept ones through their
-    * OTHER bands, so duplicate CLUSTERS are usually still discovered — only
-    * redundant intra-clique pairs are dropped.
+  /** Per-key bucket membership cap for the LSH candidate self-joins
+    * ([[bucketPairs]]). Without a cap, a corpus with k identical boilerplate
+    * documents puts all k in one bucket → O(k²) candidate pairs (the
+    * classic Common-Crawl blowup). With the cap, a bucket contributes at
+    * most cap·(cap-1)/2 pairs; members of a hot bucket beyond the cap still
+    * pair with the kept ones through their OTHER keys, so duplicate
+    * CLUSTERS are usually still discovered — only redundant intra-clique
+    * pairs are dropped.
     *
     * Measured recall vs the exact all-pairs oracle at sf0.1 (5,000 docs;
-    * `graft.ops.BucketProbe` census, round 4):
+    * `graft.ops.BucketProbe` census):
     *  - minhash: 818/821 pairs (99.6%) with ZERO buckets over the cap
     *    (max bucket 4) — the 3 missing pairs are inherent banded-LSH
     *    near-threshold recall (P[share a band] = 1-(1-s^r)^b < 1 just
     *    above the Jaccard threshold), NOT cap loss;
-    *  - simhash (round 5): pair recall 100% (was 69%) — [[simhashDedup]]
-    *    bands DISTINCT signatures and re-keys over-cap buckets on wider
-    *    sub-band keys instead of truncating them (see its scaladoc); the
-    *    27 over-cap primary buckets at sf0.1 (max 237 distinct sigs) all
-    *    resolve under the cap at the sub-band level.
+    *  - simhash: pair recall 1393/1393 — [[simhashDedup]] keys DISTINCT
+    *    signatures on 16 28-bit sub-band keys ([[simhashKeys]]). At sf0.1,
+    *    27 16-bit blocks hold more than the cap (max 237 distinct
+    *    signatures); no 28-bit key bucket does (max 54).
     * The sf0.01 driver-oracle corpus has no bucket near the cap
     * (precondition test in OpsSpec), so the hash-exact gate is unaffected. */
   val MAX_BUCKET = 64
 
-  /** Cap LSH bucket membership at `cap` rows per key (deterministic keep
-    * set: lowest ids). NOT silent: every action on the result reports the
-    * number of dropped rows as the named observed metric `metricName`
-    * (visible to QueryExecutionListeners and the Spark UI). */
-  def capBuckets(bands: DataFrame, keyCols: Seq[String], idCol: String,
-      cap: Int, metricName: String): DataFrame = {
+  /** LSH candidate pairs: distinct `(a, b)` with `a < b` for every two ids
+    * that share all of `keyCols`. Each bucket keeps its [[MAX_BUCKET]]
+    * lowest ids (deterministic keep set). NOT silent: every action on the
+    * result reports the number of dropped rows as the observed metric
+    * `metricName` (field `dropped_rows`, visible to QueryExecutionListeners
+    * and the Spark UI). */
+  private[ops] def bucketPairs(keyed: DataFrame, keyCols: Seq[String],
+      idCol: String, metricName: String): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(idCol))
-    bands.withColumn("_rn", row_number().over(w))
+    val capped = keyed.withColumn("_rn", row_number().over(w))
       .observe(metricName,
-        sum(when(col("_rn") > cap, 1L).otherwise(0L)).as("dropped_rows"))
-      .filter(col("_rn") <= cap)
-      .drop("_rn")
+        sum(when(col("_rn") > MAX_BUCKET, 1L).otherwise(0L)).as("dropped_rows"))
+      .filter(col("_rn") <= MAX_BUCKET)
+    capped.as("l").join(capped.as("r"),
+        keyCols.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
+          col(s"l.$idCol") < col(s"r.$idCol"))
+      .select(col(s"l.$idCol").as("a"), col(s"r.$idCol").as("b")).distinct()
   }
 
+  /** Word k-gram shingles over [[TextOps.wordTokens]]; a document of at
+    * most k tokens is one shingle. */
   def wordShingles(text: String, k: Int = 3): Array[String] = {
-    val safe = if (text == null) "" else text // null text = empty doc, not an NPE
-    val toks = safe.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty)
+    val toks = TextOps.wordTokens(text)
     if (toks.length <= k) Array(toks.mkString(" "))
     else Array.tabulate(toks.length - k + 1)(i => toks.slice(i, i + k).mkString(" "))
   }
@@ -214,13 +219,8 @@ object DedupOps {
       bandKeys(sig, NUM_BANDS, BAND_ROWS).iterator.map { case (b, h) => (id, b, h) }
     }.toDF("doc_id", "band", "bandhash")
 
-    val capped = capBuckets(bandsDs, Seq("band", "bandhash"), "doc_id",
-      MAX_BUCKET, "minhash_lsh_bucket_cap")
-
-    val cand = capped.as("l").join(capped.as("r"),
-        $"l.band" === $"r.band" && $"l.bandhash" === $"r.bandhash" &&
-          $"l.doc_id" < $"r.doc_id")
-      .select($"l.doc_id".as("a"), $"r.doc_id".as("b")).distinct()
+    val cand = bucketPairs(bandsDs, Seq("band", "bandhash"), "doc_id",
+      "minhash_lsh_bucket_cap")
 
     verifyJaccard(cand, documents, threshold)
   }
@@ -244,9 +244,7 @@ object DedupOps {
   // ---- SimHash -----------------------------------------------------------
 
   def simhash64(text: String): Long = {
-    val safe = if (text == null) "" else text
-    val toks = safe.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty)
+    val toks = TextOps.wordTokens(text)
     val acc = new Array[Int](64)
     var i = 0
     while (i < toks.length) {
@@ -279,7 +277,27 @@ object DedupOps {
     * receives all its near-dup pairs to other signatures. */
   val CLIQUE_CAP = 1024
 
-  /** SimHash near-dup pairs with Hamming distance <= maxHamming.
+  /** The 16 LSH keys of a 64-bit SimHash signature: for each 16-bit block
+    * b (0-3) and each 12-bit slice s (0-3) of the 48 bits outside block b,
+    * the key `(4b+s) << 28 | block_b << 12 | slice_s`.
+    *
+    * Pigeonhole, twice (Manku, Jain, Das Sarma, WWW'07): two signatures
+    * that differ in at most 3 bits leave at least one block intact, and
+    * then at least one slice of the remaining 48 bits intact, so they share
+    * at least one key. A key fixes 28 of the 64 bits, so buckets stay small
+    * where a 16-bit block alone would collect hundreds of signatures. */
+  private[ops] def simhashKeys(sig: Long): Array[Long] =
+    Array.tabulate(16) { i =>
+      val b = i / 4
+      val block = (sig >>> (16 * b)) & 0xFFFFL
+      // JVM shifts are taken mod 64 (x >>> 64 == x): block 3 has no bits
+      // above it, so its upper part is an explicit 0
+      val above = if (b == 3) 0L else (sig >>> (16 * (b + 1))) << (16 * b)
+      val rest = (sig & ((1L << (16 * b)) - 1)) | above
+      (i.toLong << 28) | (block << 12) | ((rest >>> (12 * (i % 4))) & 0xFFFL)
+    }
+
+  /** SimHash near-dup pairs with Hamming distance <= maxHamming (0..3).
     *
     * Hamming distance is a pure function of the two 64-bit signatures, so the
     * pair search runs over DISTINCT signatures, not documents:
@@ -288,30 +306,29 @@ object DedupOps {
     *     (mergeable typed aggregate: map-side partials collapse identical
     *     signatures BEFORE the shuffle; buffer bounded at [[CLIQUE_CAP]]
     *     longs per group). Yields (sig, count, capped sorted members) in a
-    *     single pass — round 5 spent a row_number window (full shuffle +
-    *     sort) plus a second count-over-window for the same facts (round-5
-    *     VERDICT #3). A clique of identical documents collapses to ONE
-    *     banding row — the hot-bucket blowup a tiny/boilerplate vocabulary
-    *     causes when banding per-document (measured round 4: 27 over-cap
-    *     buckets, 69% pair recall at sf0.1) disappears structurally;
+    *     single pass. A clique of identical documents collapses to ONE
+    *     signature, so boilerplate never floods an LSH bucket;
     *  2. intra-clique pairs (hamming 0) are generated per group row from the
     *     member array — no self-join — capped at [[CLIQUE_CAP]] members
     *     (dropped rows observed via `simhash_clique_cap`);
-    *  3. banded LSH (4×16-bit bands; pigeonhole: hamming<=3 pairs share >=1
-    *     intact band) finds DISTINCT-SIG pairs at hamming 1..maxHamming;
-    *     buckets over [[MAX_BUCKET]] are re-keyed on wider sub-band keys
-    *     (Manku et al., WWW'07) with full in-bucket recall instead of being
-    *     truncated — see the inline comment at the banding step;
+    *  3. every distinct signature takes its 16 [[simhashKeys]] and
+    *     [[bucketPairs]] pairs signatures that share a key — every pair at
+    *     hamming 1..3 shares one. A key bucket over [[MAX_BUCKET]] keeps its
+    *     lowest SIGNATURES, not its lowest representative doc ids (drops
+    *     observed via `simhash_lsh_subbucket_cap`; the largest bucket holds
+    *     9 distinct signatures at sf0.01 and 54 at sf0.1);
     *  4. signature pairs expand back to document pairs through the UNCAPPED
     *     (doc_id, sig) table (output-sized joins on sig) — over-cap clique
-    *     members keep their cross-signature near-dup pairs (round-5 ADVICE);
+    *     members keep their cross-signature near-dup pairs;
     *     a near-dup pair of two cliques legitimately yields |A|·|B| rows —
     *     that is the answer's size, not a blowup.
     *
-    * Round-5 census ([[BucketProbe]], sf0.1, 5,000 docs): pair recall vs the
-    * exact all-pairs answer went 69% → 100%; the 27 over-cap primary
-    * buckets (max 237) all resolve under the cap at the sub-band level. */
+    * The keys guarantee recall only up to 3 differing bits, so a larger
+    * `maxHamming` is refused rather than answered incompletely. */
   def simhashDedup(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
+    require(0 <= maxHamming && maxHamming <= 3,
+      s"maxHamming must be in 0..3 (the LSH keys find every pair within " +
+        s"3 differing bits, no further), got $maxHamming")
     val spark = documents.sparkSession
     import spark.implicits._
     val sigs = documents.select($"doc_id".cast("long"), $"text")
@@ -320,9 +337,7 @@ object DedupOps {
       .toDF("doc_id", "sig")
 
     // One fused aggregation: per distinct signature, the group count plus
-    // the CLIQUE_CAP lowest doc_ids sorted ascending (deterministic keep
-    // set — same contract as the former row_number window, minus its full
-    // partition sort and minus the separate bucket-sizing window).
+    // the CLIQUE_CAP lowest doc_ids sorted ascending (deterministic keep set).
     val minK = udaf(new BoundedMinK(CLIQUE_CAP))
     val grouped = sigs.groupBy($"sig").agg(minK($"doc_id").as("g"))
       .select($"sig", $"g.cnt".as("_cnt"), $"g.ids".as("_ids"))
@@ -338,69 +353,12 @@ object DedupOps {
       .toDF("a", "b")
       .select($"a", $"b", lit(0).as("hamming"))
 
-    // Banded LSH over DISTINCT signatures only. Buckets over MAX_BUCKET are
-    // NOT truncated: their members are re-keyed on a wider key — the primary
-    // 16-bit band PLUS a 12-bit sub-band of the remaining 48 bits (the
-    // Manku/Jain/Das Sarma WWW'07 refinement: more blocks, wider keys,
-    // exponentially cooler buckets). A hamming<=maxHamming(<=3) pair that
-    // agrees on the primary band has ALL its flips in the other 48 bits, so
-    // pigeonhole over the 4 sub-bands leaves >=1 sub-band intact: the hot
-    // bucket keeps FULL pair recall at O(n·cap) join cost instead of the
-    // round-4 cap cliff. Only sub-buckets that are still over the cap drop
-    // rows (observed via `simhash_lsh_subbucket_cap`).
-    val reps = grouped.select(element_at($"_ids", 1).as("rep"), $"sig")
-    val bandedRaw = reps.select($"rep", $"sig",
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright($"sig", b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*)).as("bk"))
-      .select($"rep", $"sig", $"bk.band", $"bk.key")
-    // bucket sizing stays a window, but over the DISTINCT-SIG banding table
-    // (4 rows per distinct signature — vocabulary-scale, not corpus-scale)
-    val sized = bandedRaw.withColumn("_n",
-      count(lit(1)).over(Window.partitionBy($"band", $"key")))
-
-    val cool = sized.filter($"_n" <= MAX_BUCKET).drop("_n")
-    val coolPairs = cool.as("l").join(cool.as("r"),
-        $"l.band" === $"r.band" && $"l.key" === $"r.key" &&
-          $"l.rep" < $"r.rep")
-      .select($"l.sig".as("sa"), $"r.sig".as("sb"))
-
-    // 48-bit signature remainder with the primary band's 16 bits removed.
-    val rem = (0 until 4).map { b =>
-      val low =
-        if (b == 0) lit(0L) else $"sig".bitwiseAND(lit((1L << (b * 16)) - 1))
-      val high =
-        if (b == 3) lit(0L)
-        else shiftleft(shiftrightunsigned($"sig", (b + 1) * 16), b * 16)
-      (b, low.bitwiseOR(high))
-    }.foldLeft(lit(0L)) { case (acc, (b, v)) => when($"band" === b, v).otherwise(acc) }
-
-    val hotSub = sized.filter($"_n" > MAX_BUCKET).drop("_n")
-      .withColumn("_rem", rem)
-      .select($"rep", $"sig", $"band", $"key",
-        explode(array((0 until 4).map(s =>
-          struct(lit(s).as("sub"),
-            shiftrightunsigned($"_rem", s * 12).bitwiseAND(lit(0xFFFL))
-              .as("subkey"))): _*)).as("sk"))
-      .select($"rep", $"sig", $"band", $"key", $"sk.sub", $"sk.subkey")
-    val hotCapped = capBuckets(hotSub, Seq("band", "key", "sub", "subkey"),
-      "rep", MAX_BUCKET, "simhash_lsh_subbucket_cap")
-    val hotPairs = hotCapped.as("l").join(hotCapped.as("r"),
-        $"l.band" === $"r.band" && $"l.key" === $"r.key" &&
-          $"l.sub" === $"r.sub" && $"l.subkey" === $"r.subkey" &&
-          $"l.rep" < $"r.rep")
-      .select($"l.sig".as("sa"), $"r.sig".as("sb"))
-
-    val sigPairs = coolPairs.unionByName(hotPairs).distinct()
-      .withColumn("hamming", bit_count($"sa".bitwiseXOR($"sb")))
-      .filter($"hamming" <= maxHamming) // hamming >= 1 here: sa != sb
-
     // Expand signature pairs to document pairs (unique: a doc pair maps to
     // exactly one unordered sig pair, so no post-union distinct is needed).
     // Joins go through the UNCAPPED (doc_id, sig) table: the clique cap
     // bounds only the redundant hamming-0 output above, never a document's
-    // cross-signature near-dup pairs (round-5 ADVICE).
-    val expanded = sigPairs
+    // cross-signature near-dup pairs.
+    val expanded = simhashSigPairs(grouped.select($"sig").as[Long], maxHamming)
       .join(sigs.select($"sig".as("sa"), $"doc_id".as("da")), "sa")
       .join(sigs.select($"sig".as("sb"), $"doc_id".as("db")), "sb")
       .select(least($"da", $"db").as("a"), greatest($"da", $"db").as("b"),
@@ -408,6 +366,22 @@ object DedupOps {
 
     cliquePairs.unionByName(expanded)
       .select($"a", $"b", $"hamming".cast("long").as("hamming"))
+  }
+
+  /** Pairs `(sa, sb, hamming)` of DISTINCT signatures with
+    * 1 <= hamming <= maxHamming, `sa < sb`: [[simhashDedup]]'s LSH step on
+    * its own, before the expansion to documents. */
+  private[ops] def simhashSigPairs(distinctSigs: Dataset[Long],
+      maxHamming: Int): DataFrame = {
+    val spark = distinctSigs.sparkSession
+    import spark.implicits._
+    val keyed = distinctSigs
+      .flatMap(sig => simhashKeys(sig).iterator.map(k => (sig, k)))
+      .toDF("sig", "key")
+    bucketPairs(keyed, Seq("key"), "sig", "simhash_lsh_subbucket_cap")
+      .select($"a".as("sa"), $"b".as("sb"),
+        bit_count($"a".bitwiseXOR($"b")).as("hamming"))
+      .filter($"hamming" <= maxHamming)
   }
 
   /** n-gram Jaccard dedup: LSH candidates verified at a high threshold. */

@@ -315,7 +315,8 @@ object SimilarityOps {
     * 16-bit/8-table default, ~0.80 at cosine exactly 0.95 and → 1.0 as
     * cosine → 1 (true duplicates collide in every table). Pick
     * nBits ≈ log2(corpusSize / targetBucketSize) at deployment scale.
-    * Bucket membership is capped (DedupOps.MAX_BUCKET, observed metric
+    * Candidates come from [[DedupOps.bucketPairs]], which caps bucket
+    * membership at DedupOps.MAX_BUCKET (observed metric
     * `embedding_lsh_bucket_cap`) so a hot bucket can never go O(k²). */
   def embeddingDedup(embeddings: DataFrame, minCos: Double = 0.95,
       nBits: Int = 16, nTables: Int = 8): DataFrame = {
@@ -326,16 +327,11 @@ object SimilarityOps {
       (0 until nTables).iterator.map(t => (id, t, srpBucket(v, nBits, t)))
     }.toDF("vec_id", "tbl", "bucket")
 
-    val capped = DedupOps.capBuckets(bucketed, Seq("tbl", "bucket"), "vec_id",
-      DedupOps.MAX_BUCKET, "embedding_lsh_bucket_cap")
-
     // distinct candidate ids first (multi-table collisions dedupe here),
     // then fetch the two vectors — embeddings never ride through the
     // banding shuffle
-    val cand = capped.as("l").join(capped.as("r"),
-        $"l.tbl" === $"r.tbl" && $"l.bucket" === $"r.bucket" &&
-          $"l.vec_id" < $"r.vec_id")
-      .select($"l.vec_id".as("a"), $"r.vec_id".as("b")).distinct()
+    val cand = DedupOps.bucketPairs(bucketed, Seq("tbl", "bucket"), "vec_id",
+      "embedding_lsh_bucket_cap")
 
     val vecsDf = vecs.toDF("vec_id", "embedding")
     val pairs = cand

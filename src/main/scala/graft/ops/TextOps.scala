@@ -99,6 +99,15 @@ object TextOps {
   def normTokens(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), w => length(w) > 0)
 
+  /** [[normTokens]] for one string on the JVM: lowercase, split on runs of
+    * non-[a-z0-9] characters, drop empties. NULL text is an empty document
+    * (errors-as-data, not an NPE). The one tokenizer behind the Scala-side
+    * operators (shingles, SimHash, repetition counters), so they see the
+    * tokens the oracles' SQL mirror of [[normTokens]] sees. */
+  def wordTokens(text: String): Array[String] =
+    if (text == null) Array.empty
+    else text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty)
+
   /** Inverted-index statistics: the document-term matrix with per-term
     * document frequency AND collection frequency — the integer backbone of
     * TF-IDF/BM25 scoring and search-index construction (the float score
@@ -308,17 +317,14 @@ object TextOps {
     * type (string keys, composite-hash ids) survives with its type — the
     * round-5 version cast it to long, silently nulling non-numeric ids
     * (round-5 ADVICE). NULL text counts as an empty document (total_words =
-    * distinct_words = 0, null bigram): errors-as-data, consistent with
-    * [[DedupOps.wordShingles]] and the quality counters. */
+    * distinct_words = 0, null bigram): errors-as-data, the [[wordTokens]]
+    * contract. */
   def repetitionStats(documents: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    // EXACTLY normTokens inside: lowercase, split non-[a-z0-9] runs, drop
-    // empties. One scalar function of the text column — narrow, and the id
-    // needs no encoder because it never leaves the Catalyst row.
+    // One scalar function of the text column — narrow, and the id needs no
+    // encoder because it never leaves the Catalyst row.
     val stats = udf { (text: String) =>
-      val toks = (if (text == null) "" else text)
-        .toLowerCase(java.util.Locale.ROOT)
-        .split("[^a-z0-9]+").filter(_.nonEmpty)
+      val toks = wordTokens(text)
       val total = toks.length.toLong
       val distinct = toks.distinct.length.toLong
       if (toks.length < 2) (total, distinct, None: Option[String], None: Option[Long])

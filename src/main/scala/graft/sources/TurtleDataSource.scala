@@ -3,13 +3,13 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,9 +35,19 @@ import graft.turtle.TripleRows
   * `maxBytes` option (default [[TurtleDataSource.DEFAULT_MAX_BYTES]]) yield a
   * single `FileTooLarge: …` error row instead — error-as-data, the same
   * contract as parse failures (no task failure, no OOM kill).
+  *
+  * The source is read-only: `df.write.format("turtle")` falls back to the
+  * V1 write path (the table has no BATCH_WRITE), whose [[createRelation]]
+  * refuses by name instead of failing with an internal error.
   */
-class TurtleDataSource extends TableProvider with DataSourceRegister {
+class TurtleDataSource extends TableProvider with CreatableRelationProvider
+    with DataSourceRegister {
   override def shortName(): String = "turtle"
+
+  override def createRelation(sqlContext: SQLContext, mode: SaveMode,
+      parameters: Map[String, String], data: DataFrame): BaseRelation =
+    throw new UnsupportedOperationException(
+      "the turtle source is read-only: df.write.format(\"turtle\") is not supported")
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     TurtleDataSource.SCHEMA

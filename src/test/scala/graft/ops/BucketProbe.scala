@@ -28,19 +28,17 @@ object BucketProbe {
       max($"count")).head()
     println("MINHASH buckets>" + DedupOps.MAX_BUCKET + ": " +
       mhr.getLong(0) + " max=" + mhr.getLong(1))
-    // simhashDedup bands DISTINCT signatures (round 5) — census that shape.
+    // simhashDedup keys DISTINCT signatures on their 16 sub-band keys —
+    // census that shape.
     val sigs = d.map { case (id, t) => (id, DedupOps.simhash64(t)) }
       .toDF("doc_id", "sig")
-    val sh = sigs.select($"sig").distinct()
-      .select(explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          shiftright($"sig", b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*))
-        .as("bk"))
-      .groupBy($"bk.band", $"bk.key").count()
+    val sh = sigs.select($"sig").distinct().as[Long]
+      .flatMap(sig => DedupOps.simhashKeys(sig).iterator)
+      .groupBy($"value").count()
     val shr = sh.agg(
       sum(when($"count" > DedupOps.MAX_BUCKET, 1L).otherwise(0L)),
       max($"count")).head()
-    println("SIMHASH distinct-sig buckets>" + DedupOps.MAX_BUCKET + ": " +
+    println("SIMHASH distinct-sig key buckets>" + DedupOps.MAX_BUCKET + ": " +
       shr.getLong(0) + " max=" + shr.getLong(1))
     // Pair recall vs the exact all-pairs answer (diagnostic scale: the sig
     // table is corpus-row-sized; the all-pairs loop runs on the driver).

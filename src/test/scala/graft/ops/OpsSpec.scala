@@ -1,8 +1,12 @@
 package graft.ops
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg.SparkTestSession
+import scala.jdk.CollectionConverters._
 
 class OpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -10,6 +14,24 @@ class OpsSpec extends AnyFunSuite {
 
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
   private def embs = spark.read.parquet(s"$sf/embeddings.parquet")
+
+  /** `run`'s result plus the `dropped_rows` of the observed metric `name`,
+    * once per action `run` triggers, as a QueryExecutionListener reads it. */
+  private def droppedRows[T](name: String)(run: => T): (T, Seq[Long]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.observedMetrics.get(name).foreach(r => seen.add(r.getAs[Long]("dropped_rows")))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = run
+      TestListenerBus.drain(spark.sparkContext)
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("exact dedup keeps one keeper per distinct text") {
     val d = DedupOps.exactDedup(docs)
@@ -142,8 +164,10 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("text", regexp_replace($"text", "\\s+\\S+\\s*$", ""))
     val corpus = base.unionByName(dups).unionByName(boiler)
 
-    val pairs = DedupOps.minhashDedup(corpus, 0.5)
-      .select($"a", $"b").as[(Long, Long)].collect()
+    val (pairs, dropped) = droppedRows("minhash_lsh_bucket_cap")(
+      DedupOps.minhashDedup(corpus, 0.5).select($"a", $"b").as[(Long, Long)].collect())
+    assert(dropped.nonEmpty && dropped.forall(_ > 0),
+      s"the cap dropped no boilerplate rows, or said nothing: $dropped")
     val cap = DedupOps.MAX_BUCKET
     val boilerPairs = pairs.count { case (a, b) => a >= 500000 && b >= 500000 }
     assert(boilerPairs <= cap * (cap - 1) / 2,
@@ -273,6 +297,54 @@ class OpsSpec extends AnyFunSuite {
       .groupByKey(identity).count().map(_._2).reduce(math.max)
     assert(simhashMax < DedupOps.MAX_BUCKET,
       s"simhash distinct-sig bucket $simhashMax nears cap ${DedupOps.MAX_BUCKET}")
+  }
+
+  test("simhash keys: every signature within hamming 3 shares a key with the base") {
+    // bits in all four 16-bit blocks, sign bit included
+    val base = 0x8123456789ABCDEFL
+    val keys = DedupOps.simhashKeys(base)
+    assert(keys.map(_ >>> 28).toSeq == (0L until 16L), "key index field")
+    val baseKeys = keys.toSet
+    def shares(sig: Long) = DedupOps.simhashKeys(sig).exists(baseKeys)
+    val flips = IndexedSeq.empty[Int] +: (1 to 3).flatMap(k => (0 until 64).combinations(k))
+    assert(flips.size == 1 + 64 + 2016 + 41664)
+    val missed = flips.filterNot(f => shares(f.foldLeft(base)((s, b) => s ^ (1L << b))))
+    assert(missed.isEmpty, s"flipped bits sharing no key: ${missed.take(5)}")
+    // one flip in every block leaves no block, hence no key, intact
+    assert(!shares(base ^ 1L ^ (1L << 16) ^ (1L << 32) ^ (1L << 63)))
+  }
+
+  test("simhash: 240 signatures sharing one 16-bit block pair exactly as brute force") {
+    import spark.implicits._
+    // 240 distinct signatures share block 0, far above MAX_BUCKET, each with
+    // a neighbour 1-3 bits away; the 28-bit keys must split that block
+    // under the cap and still find every pair within 3 bits
+    val rnd = new scala.util.Random(13)
+    val bases = Seq.fill(240)((rnd.nextLong() & ~0xFFFFL) | 0xBEEFL)
+    val near = bases.map { s =>
+      Iterator.continually(rnd.nextInt(64)).distinct.take(1 + rnd.nextInt(3))
+        .foldLeft(s)((x, b) => x ^ (1L << b))
+    }
+    val sigs = (bases ++ near).distinct.toArray
+    assert(sigs.count(s => (s & 0xFFFFL) == 0xBEEFL) >= 200)
+    val truth = (for {
+      i <- sigs.indices
+      j <- i + 1 until sigs.length
+      h = java.lang.Long.bitCount(sigs(i) ^ sigs(j)) if h <= 3
+    } yield (math.min(sigs(i), sigs(j)), math.max(sigs(i), sigs(j)), h)).toSet
+    assert(truth.map(_._3) == Set(1, 2, 3))
+    val (got, dropped) = droppedRows("simhash_lsh_subbucket_cap")(
+      DedupOps.simhashSigPairs(sigs.toSeq.toDS(), 3).as[(Long, Long, Int)].collect())
+    assert(got.length == got.toSet.size && got.toSet == truth,
+      s"missing ${(truth -- got).take(5)}, extra ${(got.toSet -- truth).take(5)}")
+    assert(dropped.nonEmpty && dropped.forall(_ == 0), s"sub-bucket drops: $dropped")
+  }
+
+  test("simhash dedup refuses a maxHamming its keys cannot answer") {
+    for (h <- Seq(4, -1)) {
+      val e = intercept[IllegalArgumentException](DedupOps.simhashDedup(docs, h))
+      assert(e.getMessage.contains("maxHamming") && e.getMessage.contains(s"got $h"))
+    }
   }
 
   test("simhash hot bucket: identical-sig clique above the bucket cap keeps full pair recall") {
