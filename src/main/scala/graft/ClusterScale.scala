@@ -289,7 +289,7 @@ object ClusterScale {
         val p = timed("probe")(graft.kg.KgPipeline.probe(triples))
         val labels = graft.kg.KgPipeline.componentLabels(triples, p)
         val canonical = graft.kg.Canonicalize.canonicalizeTriples(triples, labels)
-        timed("write+lineage")(graft.kg.Materialize.write(canonical, out,
+        timed("write")(graft.kg.Materialize.write(canonical, out,
           numBuckets = p.rows.fold(0)(graft.kg.Materialize.autoBuckets(spark, _))))
         timed("linked count")(graft.kg.KgPipeline.linkedCount(triples, p))
         timed("components")(labels.agg(countDistinct($"canonical")).head())

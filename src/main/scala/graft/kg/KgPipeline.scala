@@ -12,7 +12,7 @@ import Model._
 /** End-to-end KG construction (north_star): synthesize/scan pages → extract
   * embedded Turtle → parse + produce triples → entity-link mentions →
   * canonicalize via connected components → materialize partitioned triple
-  * tables with lineage + manifest.
+  * tables whose manifest carries each bucket's lineage row.
   *
   * Session defaults for scale are set in [[session]]: AQE on (coalescing +
   * skew-join splitting), shuffle partitions sized to cores (overridable),
@@ -172,16 +172,13 @@ object KgPipeline {
     val lineage = Materialize.write(canonical, outDir,
       numBuckets = p.rows.fold(0)(Materialize.autoBuckets(spark, _)))
 
-    // totals come out of the (tiny, already-written) lineage table — one
-    // small collect instead of two extra passes over the triple stream
-    val totals = lineage.agg(sum($"triples"), sum($"errors")).head()
-    def lng(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
-
-    // the table's bucket count as committed: a resumed table keeps its own
-    val buckets = Materialize.readManifestFull(outDir)._1.getOrElse(
+    // the table's bucket count and lineage rows as committed: a resumed
+    // table keeps its own count, and its totals are the rows' sums
+    val (nb, rows) = Materialize.readManifestLineage(outDir)
+    val buckets = nb.getOrElse(
       throw new IllegalStateException(s"no manifest in $outDir after the write"))
 
-    Result(n, lng(0), lng(1),
+    Result(n, rows.map(_.triples).sum, rows.map(_.errors).sum,
       Await.result(linkedCountF, Duration.Inf),
       Await.result(componentsF, Duration.Inf), lineage, buckets, p.rows)
   }

@@ -1,9 +1,16 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.CollectionAccumulator
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Graph materialization: partitioned triple tables + per-partition lineage
   * + a resumable checkpoint manifest (SURVEY.md §2.5 / §7 step 10).
@@ -32,6 +39,10 @@ import java.nio.charset.StandardCharsets
   *    renamed+committed (partition-level progress), and a crash during the
   *    staging write loses only staging. Renames are metadata ops on
   *    HDFS-like filesystems.
+  *  - LINEAGE: the staging write's reduce tasks count their bucket
+  *    ([[countLineage]]) and each manifest update records the [[Lineage]]
+  *    rows of the buckets it commits. A bucket is committed only together
+  *    with its row, so the committed table is never read back to count it.
   *  - all filesystem mutations go through the Hadoop FileSystem API, so the
   *    exactly-once cleanup works on HDFS/S3A, not only file:// (a
   *    java.nio.file cleanup would silently no-op off-JVM-local disk).
@@ -63,10 +74,10 @@ object Materialize {
 
   /** Bucket count for a NEW table of `rows` measured rows:
     * clamp(ceil(rows / 200k), defaultParallelism, [[capBuckets]]).
-    * Every bucket file costs a write task, a Hadoop-conf deserialization
-    * and a lineage re-read whatever its size, so small tables want few
-    * files. Seconds per pipeline run by bucket count, median of 3, on a
-    * shared 4-core host (7g heap, [[ForkFreeLocalFileSystem]]). The rule
+    * Every bucket file costs a write task and a Hadoop-conf
+    * deserialization whatever its size, so small tables want few files.
+    * Seconds per pipeline run by bucket count, median of 3, on a shared
+    * 4-core host (7g heap, [[ForkFreeLocalFileSystem]]). The rule
     * reads the triples plus the error rows (849,400 rows at 160k pages):
     *
     * {{{
@@ -130,7 +141,9 @@ object Materialize {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Write buckets not yet present in the manifest; returns lineage rows.
+  /** Write buckets not yet present in the manifest; returns the table's
+    * lineage, one [[Lineage]] row per bucket, as a local relation over the
+    * manifest's rows.
     *
     * @param numBuckets the count for a new table, e.g. from
     *                   [[autoBuckets]]; 0 = auto (max(NUM_BUCKETS,
@@ -138,10 +151,10 @@ object Materialize {
     *                   resumed table keeps its own count either way. */
   def write(triples: DataFrame, outDir: String, numBuckets: Int = 0): DataFrame = {
     val spark = triples.sparkSession
-    import spark.implicits._
 
     val hfs = fs(spark, outDir)
-    val (manifestBuckets, done) = readManifestFull(outDir)
+    val (manifestBuckets, committedRows) = readManifestLineage(outDir)
+    val done = committedRows.map(_.bucket).toSet
     // numBuckets resolution order: manifest > write-once sidecar > caller >
     // auto. The sidecar exists because the manifest swap (delete+rename on
     // filesystems without atomic overwrite) can lose the manifest in a
@@ -179,6 +192,7 @@ object Materialize {
       if (done.isEmpty) withBucket
       else withBucket.filter(!col("bucket").isin(done.toSeq: _*))
 
+    var committed = committedRows
     if (pendingBuckets.nonEmpty) {
       // exactly-once per bucket: a crash between a group's renames and its
       // manifest commit leaves orphan bucket dirs in the final table;
@@ -203,8 +217,9 @@ object Materialize {
       val cwKey = "spark.sql.maxConcurrentOutputFileWriters"
       val prevCw = spark.conf.getOption(cwKey)
       spark.conf.set(cwKey, "4")
+      val counts = spark.sparkContext.collectionAccumulator[Lineage]("graft.lineage")
       try
-        repartitionByBucketIdentity(pending, nb)
+        countLineage(repartitionByBucketIdentity(pending, nb), counts)
           .write.mode(SaveMode.Overwrite)
           .partitionBy("bucket")
           .parquet(s"$staging/triples")
@@ -214,17 +229,19 @@ object Materialize {
       }
 
       // commit in groups: rename staged bucket dirs into the final table,
-      // then advance the manifest — partition-level progress survives a
-      // crash between groups
+      // then advance the manifest with the groups' lineage rows —
+      // partition-level progress survives a crash between groups
+      val counted = counts.value.asScala.map(l => l.bucket -> l).toMap
       val finalTriples = new Path(s"$outDir/triples")
       hfs.mkdirs(finalTriples)
       val groupSize = math.max(1, math.ceil(
         pendingBuckets.size.toDouble / COMMIT_GROUPS).toInt)
-      var committed = done
       pendingBuckets.grouped(groupSize).foreach { group =>
         group.foreach { b =>
           val src = new Path(s"$staging/triples/bucket=$b")
           if (hfs.exists(src)) {
+            if (!counted.contains(b))
+              throw new IllegalStateException(s"bucket $b staged rows no write task counted")
             // Hadoop FileSystem.rename reports most failures by returning
             // false, not throwing — a bucket must NEVER be recorded
             // committed without its data in place
@@ -233,55 +250,15 @@ object Materialize {
               throw new java.io.IOException(
                 s"bucket commit rename failed: $src -> $dst")
           }
-          // a bucket with zero rows stages no dir; it is still committed
         }
-        committed = committed ++ group
+        // a bucket with zero rows stages no dir; it commits a zero row
+        committed = committed ++
+          group.map(b => counted.getOrElse(b, Lineage(b, 0, 0, 0, 0)))
         writeManifest(outDir, nb, committed)
       }
       hfs.delete(new Path(staging), true)
     }
-
-    // per-bucket lineage (counts of pages/blocks/triples/errors), computed
-    // from the parquet just written: a pruned 4-column scan of the
-    // materialized table instead of a full re-pass over the pipeline.
-    // schema given explicitly so an empty write (zero input rows) still
-    // reads back as an empty frame instead of failing schema inference
-    val written = spark.read.schema(withBucket.schema)
-      .parquet(s"$outDir/triples")
-      .select($"bucket", $"url", $"block", $"error")
-    // the aggregate is ≤ numBuckets rows: collect it ONCE, persist the
-    // _lineage table from the local rows, and hand the caller the local
-    // relation — this removes two driver-blocking round trips (re-read of
-    // _lineage + a separate totals job) from the commit critical path.
-    // pages/blocks distinct-count over 64-bit url hashes, not url strings:
-    // the distinct shuffle moves 8-byte longs instead of full URLs
-    // (collision odds over 10^9 pages ≈ 10^-1.. negligible at any bench
-    // scale and documented; triple/error counts are exact).
-    val compact = written.select($"bucket",
-      xxhash64($"url").as("uh"), xxhash64($"url", $"block").as("ubh"),
-      $"error".isNull.as("ok"))
-    // two-level aggregation instead of groupBy(bucket).agg(countDistinct,
-    // countDistinct, ...): multiple distinct aggregates plan an Expand that
-    // multiplies every scanned row by the distinct-column count before the
-    // shuffle (measured: lineage_agg was ~29% of the whole write at w=1).
-    // Level 1 collapses to one row per (bucket, block) — map-side partials,
-    // triple-count sums carried along; level 2 then needs ONE distinct
-    // (pages) over the already-tiny block-level rows.
-    val lineageRows = compact
-      .groupBy($"bucket", $"ubh", $"uh").agg(
-        count(when($"ok", 1)).as("t"),
-        count(when(!$"ok", 1)).as("e"))
-      .groupBy($"bucket").agg(
-        countDistinct($"uh").as("pages"),
-        count(lit(1)).as("blocks"),
-        sum($"t").as("triples"),
-        sum($"e").as("errors"))
-      .as[(Int, Long, Long, Long, Long)].collect().toSeq
-    val lineage = spark.createDataset(lineageRows)
-      .toDF("bucket", "pages", "blocks", "triples", "errors")
-    lineage.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/_lineage")
-    lineage
+    spark.createDataFrame(committed.sortBy(_.bucket))
   }
 
   /** Hadoop conf for manifest IO: the ACTIVE session's conf when one exists
@@ -300,21 +277,20 @@ object Materialize {
     * check would then preserve forever — permanently disabling the very
     * crash protection the sidecar provides). A VALID existing file wins;
     * an unreadable one is replaced. */
-  private def writeBucketSidecarOnce(outDir: String, numBuckets: Int): Unit = {
-    val p = new Path(outDir)
-    val hfs = p.getFileSystem(hadoopConf)
-    hfs.mkdirs(p)
-    val f = new Path(outDir, "_buckets.json")
-    if (readBucketSidecar(outDir).isEmpty) {
-      val tmp = new Path(outDir, "_buckets.json.tmp")
-      val out = hfs.create(tmp, true)
-      try out.write(s"""{"numBuckets":$numBuckets}"""
-        .getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (hfs.exists(f)) hfs.delete(f, false) // corrupt leftover
-      if (!hfs.rename(tmp, f))
-        throw new java.io.IOException(s"bucket sidecar rename failed: $tmp -> $f")
-    }
+  private def writeBucketSidecarOnce(outDir: String, numBuckets: Int): Unit =
+    if (readBucketSidecar(outDir).isEmpty)
+      replaceSmallFile(new Path(outDir, "_buckets.json"), s"""{"numBuckets":$numBuckets}""")
+
+  /** `text` as the whole of `f`: written to `f.tmp`, then renamed over `f`
+    * (a corrupt leftover included). */
+  private def replaceSmallFile(f: Path, text: String): Unit = {
+    val hfs = f.getFileSystem(hadoopConf)
+    hfs.mkdirs(f.getParent)
+    val tmp = f.suffix(".tmp")
+    val out = hfs.create(tmp, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    hfs.delete(f, false)
+    if (!hfs.rename(tmp, f)) throw new java.io.IOException(s"rename failed: $tmp -> $f")
   }
 
   /** The whole of a small metadata file as UTF-8, or None when it does not
@@ -329,45 +305,72 @@ object Materialize {
     }
   }
 
-  private def readBucketSidecar(outDir: String): Option[Int] =
-    readSmallFile(new Path(outDir, "_buckets.json")).flatMap { s =>
-      "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    }
+  private def numBucketsIn(json: String): Option[Int] =
+    "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(json).map(_.group(1).toInt)
 
-  /** Manifest = commit point. Written to a temp file then atomically renamed. */
-  def writeManifest(outDir: String, numBuckets: Int, buckets: Set[Int]): Unit = {
-    val p = new Path(outDir)
-    val hfs = p.getFileSystem(hadoopConf)
-    hfs.mkdirs(p)
-    val json =
-      s"""{"format":"graft-triples-v1","numBuckets":$numBuckets,"completedBuckets":[${buckets.toSeq.sorted.mkString(",")}]}"""
-    val tmp = new Path(outDir, "_manifest.json.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val dst = new Path(outDir, "_manifest.json")
-    hfs.delete(dst, false)
-    if (!hfs.rename(tmp, dst))
-      throw new java.io.IOException(s"manifest commit rename failed: $tmp -> $dst")
+  private def readBucketSidecar(outDir: String): Option[Int] =
+    readSmallFile(new Path(outDir, "_buckets.json")).flatMap(numBucketsIn)
+
+  /** Manifest = commit point, naming each committed bucket by its lineage
+    * row. Written to a temp file then atomically renamed. */
+  def writeManifest(outDir: String, numBuckets: Int, lineage: Seq[Lineage]): Unit = {
+    val rows = lineage.sortBy(_.bucket).map(l => s"""{"bucket":${l.bucket},"pages":${l.pages},""" +
+      s""""blocks":${l.blocks},"triples":${l.triples},"errors":${l.errors}}""")
+    replaceSmallFile(new Path(outDir, "_manifest.json"),
+      s"""{"format":"graft-triples-v2","numBuckets":$numBuckets,"lineage":[${rows.mkString(",")}]}""")
   }
 
-  /** Back-compat helper used by tests: manifest with the default layout. */
-  def writeManifest(outDir: String, buckets: Set[Int]): Unit =
-    writeManifest(outDir, readManifestFull(outDir)._1.getOrElse(NUM_BUCKETS), buckets)
-
-  def readManifest(outDir: String): Set[Int] = readManifestFull(outDir)._2
-
-  /** (numBuckets if a manifest exists, completed buckets). */
+  /** (numBuckets if a manifest exists, committed buckets). */
   def readManifestFull(outDir: String): (Option[Int], Set[Int]) =
+    readManifestLineage(outDir) match { case (nb, rows) => (nb, rows.map(_.bucket).toSet) }
+
+  /** (numBuckets if a manifest exists, the committed buckets' lineage
+    * rows). A manifest without rows (format v1) commits no bucket. */
+  def readManifestLineage(outDir: String): (Option[Int], Seq[Lineage]) =
     readSmallFile(new Path(outDir, "_manifest.json")) match {
-      case None => (None, Set.empty)
+      case None => (None, Seq.empty)
       case Some(s) =>
-        val nb = "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-        val done = "\"completedBuckets\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
-          .map(_.group(1)).filter(_.nonEmpty)
-          .map(_.split(",").map(_.toInt).toSet).getOrElse(Set.empty)
-        (nb, done)
+        val rows = """\{"bucket":(\d+),"pages":(\d+),"blocks":(\d+),"triples":(\d+),"errors":(\d+)\}"""
+          .r.findAllMatchIn(s).map(_.subgroups.map(_.toLong))
+          .map(g => Lineage(g(0).toInt, g(1), g(2), g(3), g(4)))
+        (numBucketsIn(s), rows.toSeq)
     }
 
   def readTriples(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/triples")
+
+  /** One committed bucket's lineage: its distinct pages (`xxhash64(url)`),
+    * distinct blocks (`xxhash64(url, block)`), triple rows (`error` null)
+    * and error rows. */
+  final case class Lineage(bucket: Int, pages: Long, blocks: Long, triples: Long, errors: Long)
+
+  /** `rows` as they are, while each task counts its rows into one
+    * [[Lineage]] row and adds it to `counts` once it has read its last row;
+    * Spark merges a result stage's accumulator updates once per successful
+    * partition. Every task holds exactly one bucket, its partition index
+    * ([[repartitionByBucketIdentity]]); a row of any other bucket fails the
+    * task. Its two hash sets hold at most two 64-bit keys per row of its
+    * bucket: at most 200k rows at [[autoBuckets]]' target. */
+  private[kg] def countLineage(rows: DataFrame, counts: CollectionAccumulator[Lineage]): DataFrame = {
+    val Seq(b, u, bl, e) = Seq("bucket", "url", "block", "error").map(rows.schema.fieldIndex)
+    val blockType = rows.schema(bl).dataType
+    rows.mapPartitions { (it: Iterator[Row]) =>
+      val bucket = TaskContext.getPartitionId()
+      val pages, blocks = mutable.LongMap.empty[Unit]
+      var triples, errors = 0L
+      it.map { r =>
+        if (r.getInt(b) != bucket)
+          throw new IllegalStateException(s"write task $bucket got a row of bucket ${r.getInt(b)}")
+        // xxhash64(url) and xxhash64(url, block), as Spark's xxhash64 computes them
+        val uh = XxHash64Function.hash(UTF8String.fromString(r.getString(u)), StringType, 42L)
+        pages.update(uh, ())
+        blocks.update(XxHash64Function.hash(r.get(bl), blockType, uh), ())
+        if (r.isNullAt(e)) triples += 1 else errors += 1
+        r
+      } ++ {
+        counts.add(Lineage(bucket, pages.size, blocks.size, triples, errors))
+        Iterator.empty
+      }
+    }(Encoders.row(rows.schema))
+  }
 }

@@ -254,12 +254,16 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a crash: data written but manifest missing for 2 buckets
     Materialize.write(triples, out)
     val full = Materialize.readTriples(spark, out).count()
-    Materialize.writeManifest(out,
-      (0 until Materialize.NUM_BUCKETS).toSet -- Set(0, 1))
+    val files = MaterializeLineageSpec.bucketFiles(out)
+    MaterializeLineageSpec.keepCommitted(out)(b => b > 1)
     // retry: buckets 0 and 1 must be rewritten WITHOUT duplication
     Materialize.write(triples, out)
     assert(Materialize.readTriples(spark, out).count() == full)
-    assert(Materialize.readManifest(out) == (0 until Materialize.NUM_BUCKETS).toSet)
+    assert(Materialize.readManifestFull(out)._2 == (0 until Materialize.NUM_BUCKETS).toSet)
+    // the committed buckets' files are untouched
+    assert(MaterializeLineageSpec.bucketFiles(out).filter(_._1 > 1) == files.filter(_._1 > 1))
+    assert(MaterializeLineageSpec.manifestRows(out) ==
+      MaterializeLineageSpec.readBack(spark, out))
   }
 
   test("identity bucket repartition: shuffle partition index == bucket id") {
@@ -399,7 +403,8 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // simulate a crash AFTER the first commit group: only the first group's
     // buckets are committed; later buckets' data is gone with staging
     val firstGroup = (0 until nb / 4).toSet
-    Materialize.writeManifest(out, nb, firstGroup)
+    val files = MaterializeLineageSpec.bucketFiles(out).filter(f => firstGroup(f._1))
+    MaterializeLineageSpec.keepCommitted(out)(firstGroup)
     (nb / 4 until nb).foreach { b =>
       val dir = java.nio.file.Paths.get(out, "triples", s"bucket=$b")
       if (java.nio.file.Files.exists(dir)) {
@@ -417,7 +422,12 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // resume: only the missing buckets are rewritten; totals restore exactly
     Materialize.write(triples, out)
     assert(Materialize.readTriples(spark, out).count() == full)
-    assert(Materialize.readManifest(out) == (0 until nb).toSet)
+    assert(Materialize.readManifestFull(out)._2 == (0 until nb).toSet)
+    // the committed group's files are untouched, and the resumed table's
+    // lineage is the read-back aggregate's
+    assert(MaterializeLineageSpec.bucketFiles(out).filter(f => firstGroup(f._1)) == files)
+    assert(MaterializeLineageSpec.manifestRows(out) ==
+      MaterializeLineageSpec.readBack(spark, out))
   }
 
   test("full pipeline: run, materialize, manifest, resume") {
@@ -427,7 +437,7 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.errors > 0)
     assert(r.linkedMentions > 0)
     assert(r.components > 0)
-    assert(Materialize.readManifest(out) ==
+    assert(Materialize.readManifestFull(out)._2 ==
       (0 until Materialize.autoBuckets(spark, r.triples + r.errors)).toSet)
     val written = Materialize.readTriples(spark, out)
     assert(written.count() > 0)
@@ -476,7 +486,7 @@ class BucketRuleSpec extends AnyFunSuite {
 
   test("a resumed table keeps its manifest's bucket count") {
     val out = tmp()
-    Materialize.writeManifest(out, 32, Set.empty)
+    Materialize.writeManifest(out, 32, Seq.empty)
     val r = KgPipeline.run(spark, 300, out)
     assert(r.measuredRows.map(Materialize.autoBuckets(spark, _)).exists(_ != 32))
     assert(r.buckets == 32)
